@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
-import graft.core.Watchdog
+import graft.core.{GraftSession, Watchdog}
 
 /** Benchmark main. Harness-survival + honest-measurement design (the
   * round-9/10 lessons):
@@ -40,8 +40,9 @@ object Bench {
   private val QueryTimeoutS = 120L
 
   /** Force full evaluation of every output column. Map-typed columns hash
-    * only under the legacy flag (set below); anything else unhashable
-    * falls back to count() so the query is still timed, just weaker. */
+    * only under the legacy flag (set by GraftSession.forHarness); anything
+    * else unhashable falls back to count() so the query is still timed,
+    * just weaker. */
   private def touchAll(df: DataFrame): Unit = {
     try df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
     catch { case _: org.apache.spark.sql.AnalysisException => df.count() }
@@ -72,50 +73,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // checksum action hashes whole rows; several queries emit map columns
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      // Size the codegen cache to the SUITE's working set, not one
-      // query's. The default 100-entry Janino cache thrashes completely
-      // under 314 queries x ~10 fragments each, so every measured pass
-      // re-pays compilation its own warmup already did — the measured
-      // "in-suite inflation": ev_sketch solo 3.00 s warm-cache vs
-      // 5.95 s with the cache forced to 1 entry (1.98x), bracketing the
-      // 1.74x the full suite showed vs solo (r15 bisect, PLANS.md). Any
-      // long-lived session serving many distinct queries wants this;
-      // 8192 entries is ~the suite's fragment count with headroom
-      // (metaspace cost, not heap). Static conf, so set at build time.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "8192"))
-      // scan fan-out (core/Tables.fanout) A/B toggles — benchmarking
-      // aids only; defaults live in the operator ("auto" = the
-      // per-query FanoutHints winner list decides; "true"/"false"
-      // force it everywhere / nowhere for A/B)
-      .config("graft.scan.fanout",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT", "auto"))
-      .config("graft.scan.fanout.parts",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT_PARTS", "0"))
-      // AQE-sized CACHED-plan partitioning is per-query opt-in
-      // (core/CachedPlanAqe + queries/CachedPlanAqeHints): the r17
-      // full-suite A/B measured the session-wide flag at geomean 0.906
-      // (flip_check: FLIP DISALLOWED) with ~22 s of wins concentrated
-      // in 24 loop/cache-heavy queries. "auto" (default) lets the
-      // winner list toggle it at construction; "true"/"false" force it
-      // everywhere / nowhere for A/B, mirroring SPARK_GRAFT_SCAN_FANOUT.
-      .config(graft.core.CachedPlanAqe.ModeKey,
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "auto"))
-      .config(graft.core.CachedPlanAqe.SparkKey,
-        (sys.env.get("SPARK_GRAFT_CACHED_PLAN_AQE").contains("true")).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.harnessCpus
+    val spark = GraftSession.forHarness("graft-bench")
     val sc = spark.sparkContext
     // SPARK_GRAFT_BENCH_ONLY=name1,name2 restricts the run to a subset —
     // for one-off idle-host re-times of a single query without paying the
@@ -162,7 +121,7 @@ object Bench {
     // warmup: run every query once at the smallest scale factor so the
     // measured pass times steady-state execution, not first-run codegen
     // compilation and JIT (cold-vs-warm was up to 10x on the sketch ops)
-    canaryBefore = hostCanary(spark, cpus.toInt)
+    canaryBefore = hostCanary(spark, cpus)
     System.err.println(f"[bench] host canary (before): $canaryBefore%.3f s")
 
     val warmDir = "/root/testdata/sf0.001"
@@ -289,7 +248,7 @@ object Bench {
         }
       }
     }
-    canaryAfter = hostCanary(spark, cpus.toInt)
+    canaryAfter = hostCanary(spark, cpus)
     System.err.println(f"[bench] host canary (after): $canaryAfter%.3f s")
     emit(partial = false)
     spark.stop()

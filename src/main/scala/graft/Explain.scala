@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: print the formatted physical plan + two timed runs for the
@@ -11,24 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same A/B toggle Bench exposes: "auto" (default) lets the
-      // per-query FanoutHints list decide; "true"/"false" force it
-      .config("graft.scan.fanout",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT", "auto"))
-      .config(graft.core.CachedPlanAqe.ModeKey,
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "auto"))
-      .config(graft.core.CachedPlanAqe.SparkKey,
-        (sys.env.get("SPARK_GRAFT_CACHED_PLAN_AQE").contains("true")).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.forHarness("graft-explain")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"\n================ $name ================")

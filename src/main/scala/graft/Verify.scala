@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import graft.core.Watchdog
+import graft.core.{GraftSession, Watchdog}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -86,29 +85,9 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long + normalize
-      // in Tables.events (Spark has no native ns timestamp).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // suite-sized codegen cache (see Bench.scala: the default 100
-      // entries thrash under 314 queries' fragments; shared scan/
-      // projection fragments then recompile per query)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "8192"))
-      // AQE-sized cached-plan partitioning, per-query opt-in (see
-      // Bench.scala / core.CachedPlanAqe; same modes on both mains so
-      // Verify exercises the exact physical shape Bench times)
-      .config(graft.core.CachedPlanAqe.ModeKey,
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "auto"))
-      .config(graft.core.CachedPlanAqe.SparkKey,
-        (sys.env.get("SPARK_GRAFT_CACHED_PLAN_AQE").contains("true")).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // same factory and A/B toggles as Bench, so Verify exercises the
+    // exact physical shape Bench times
+    val spark = GraftSession.forHarness("graft-verify")
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -25,7 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[Caches.track]], which calls persist() eagerly, so toggling the
   * conf around construction pins the behavior per query with no leak
   * into neighbors (Bench/Verify run queries strictly sequentially; the
-  * toggle is try/finally-reset).
+  * toggle is try/finally-restored to the session's prior value, or
+  * unset if it had none).
   *
   * Modes, via the `graft.cachedPlanAqe` session conf (mirrors
   * `graft.scan.fanout`): "auto" (default) = the per-query winner list
@@ -41,9 +42,14 @@ object CachedPlanAqe {
     val mode = spark.conf.get(ModeKey, "auto")
     if (mode != "auto") body
     else {
+      val conf = spark.sessionState.conf
+      val prior = Option.when(conf.contains(SparkKey))(conf.getConfString(SparkKey))
       spark.conf.set(SparkKey, "true")
       try body
-      finally spark.conf.set(SparkKey, "false")
+      finally prior match {
+        case Some(v) => spark.conf.set(SparkKey, v)
+        case None    => spark.conf.unset(SparkKey)
+      }
     }
   }
 }

@@ -1,7 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
-
 /** O5 — retry policy (SURVEY.md §2; reference: the Airflow DAG
   * `default_args` block `retries=1, retry_delay=timedelta(minutes=5)`,
   * diagnostic_group_pipeline_with_api.py:29-35, mirrored in every DAG
@@ -9,9 +7,8 @@ import org.apache.spark.sql.SparkSession
   * split of that policy has two layers:
   *
   *   - TASK-ATTEMPT retries are Spark's own `spark.task.maxFailures`
-  *     (per-task, in-scheduler, no driver involvement) — exposed here as
-  *     [[RetryPolicy.taskMaxFailures]] so a pipeline states its tolerance
-  *     instead of inheriting whatever the cluster default is.
+  *     (per-task, in-scheduler, no driver involvement), set at cluster
+  *     launch like any other Spark conf.
   *   - STAGE/APP-LEVEL retries — the actual analogue of an Airflow task
   *     retry, re-running a whole pipeline stage (a query + its write)
   *     after transient infrastructure failure — are [[Retry.withRetry]],
@@ -28,30 +25,10 @@ object Retry {
   /** The reference's default: one retry after five minutes. */
   final case class RetryPolicy(
       retries: Int = 1,
-      retryDelayMillis: Long = 5L * 60 * 1000,
-      taskMaxFailures: Int = 4) {
+      retryDelayMillis: Long = 5L * 60 * 1000) {
     require(retries >= 0, "retries must be >= 0")
     require(retryDelayMillis >= 0, "retryDelay must be >= 0")
-    require(taskMaxFailures >= 1, "taskMaxFailures must be >= 1")
   }
-
-  /** Session factory with the task-attempt half of the policy applied.
-    * `spark.task.maxFailures` is a cluster-launch config (it cannot be
-    * set on a live session), so it threads through session creation —
-    * the one policy field [[withRetry]] can't apply after the fact.
-    */
-  def sessionWithPolicy(policy: RetryPolicy,
-                        master: String = "local[*]",
-                        appName: String = "graft"): SparkSession =
-    SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.task.maxFailures", policy.taskMaxFailures.toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
 
   /** Run `body`, retrying up to `policy.retries` times after
     * `policy.retryDelayMillis` on ANY non-fatal failure — the Airflow

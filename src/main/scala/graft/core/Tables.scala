@@ -72,13 +72,7 @@ object Tables {
     if (!on) return df
     val minBytes =
       spark.conf.get("graft.scan.fanout.minBytes", "262144").toLong
-    // graft.scan.fanout.parts > 0 caps the fan-out width below the core
-    // count — the exchange-read fan and the per-stage task count both
-    // scale with it, so narrower can win when per-row work is modest
-    val partsCap = spark.conf.get("graft.scan.fanout.parts", "0").toInt
-    val target =
-      if (partsCap > 0) math.min(partsCap, spark.sparkContext.defaultParallelism)
-      else spark.sparkContext.defaultParallelism
+    val target = spark.sparkContext.defaultParallelism
     val bytes =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
@@ -91,7 +85,7 @@ object Tables {
     // so they already approach core-count splits; estimate with the
     // same formula or the trigger fires on tables that are not narrow.
     val conf = spark.sessionState.conf
-    val bytesPerCore = bytes / math.max(1, spark.sparkContext.defaultParallelism)
+    val bytesPerCore = bytes / math.max(1, target)
     val maxSplit = math.min(conf.filesMaxPartitionBytes,
       math.max(conf.filesOpenCostInBytes, bytesPerCore))
     val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)

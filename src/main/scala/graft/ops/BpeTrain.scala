@@ -166,15 +166,6 @@ object BpeTrain {
     merges.toSeq
   }
 
-  /** [[learnMerges]] returning just the (left, right) pairs in training
-    * order — the shape [[encode]]/[[vocab]] consume. The shared trainer
-    * behind the `ta_bpe` query family: one training, many consumers.
-    */
-  def learnMergePairs(docs: DataFrame, textCol: String, nMerges: Int,
-                      maxVocab: Int = MaxVocab): Seq[(String, String)] =
-    learnMergesLocal(collectWordFreq(docs, textCol, maxVocab), nMerges)
-      .map(m => (m._2, m._3))
-
   /** How many merge projections may stack before the word table is
     * re-materialized (learn loop) or the encode dictionary is
     * checkpointed (dict path) — bounds both lineage depth and the

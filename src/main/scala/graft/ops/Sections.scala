@@ -47,9 +47,6 @@ object Sections {
       .map(r => SectionSpec(r.getString(0), r.getString(1)))
   }
 
-  def extractSection(text: Column, spec: SectionSpec): Column =
-    trim(regexp_extract(text, spec.pattern, 1)).as(spec.name)
-
   /** T4 — add one column per section plus the reference's derived columns:
     *  - `filtered_message`: the concatenated non-empty matched sections, or
     *    the whole text when nothing matched;

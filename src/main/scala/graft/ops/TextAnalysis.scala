@@ -32,9 +32,6 @@ object TextAnalysis {
     "en" -> " the ", "es" -> " data ", "fr" -> " join ",
     "de" -> " merge ", "zh" -> " spark ")
 
-  def langScores(text: Column, markers: Seq[(String, String)] = defaultMarkers): Seq[Column] =
-    markers.map { case (lang, m) => occurrences(text, m).as(s"score_$lang") }
-
   /** Argmax over the score columns, ties resolved by marker order. */
   def predictLang(text: Column, markers: Seq[(String, String)] = defaultMarkers): Column = {
     val scores = markers.map { case (lang, m) => lang -> occurrences(text, m) }

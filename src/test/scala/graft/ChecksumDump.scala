@@ -17,31 +17,26 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, sum, xxhash64}
   *        [conf:k=v ...] [query ...]"
   */
 object ChecksumDump {
+  /** Set every `conf:k=v` argument on the session; returns the others. */
+  private[graft] def applyConfArgs(spark: SparkSession,
+                                   args: Seq[String]): Seq[String] = {
+    val (confArgs, rest) = args.partition(_.startsWith("conf:"))
+    confArgs.foreach { a =>
+      val kv = a.stripPrefix("conf:").split("=", 2)
+      spark.conf.set(kv(0), kv(1))
+    }
+    rest
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ChecksumDump <sfDir> <outFile> " +
       "[conf:k=v ...] [query ...]")
     val sfDir = args(0)
     val outFile = args(1)
-    val (confArgs, nameArgs) = args.drop(2).partition(_.startsWith("conf:"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    confArgs.foreach { a =>
-      val kv = a.stripPrefix("conf:").split("=", 2)
-      spark.conf.set(kv(0), kv(1))
-    }
+    val spark = graft.core.GraftSession.forHarness("graft-checksum")
+    val nameArgs = applyConfArgs(spark, args.drop(2).toSeq)
     val names =
-      if (nameArgs.nonEmpty) nameArgs.toSeq
+      if (nameArgs.nonEmpty) nameArgs
       else SparkEntry.queries.keys.toSeq.sorted
     val out = new java.io.PrintWriter(outFile)
     names.foreach { name =>

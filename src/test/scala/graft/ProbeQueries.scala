@@ -12,12 +12,7 @@ package graft
   */
 object ProbeQueries {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName("scratch").getOrCreate()
+    val spark = graft.core.GraftSession.forHarness("graft-probe")
     val dir = args.head
     val names = args.tail.toSeq
     for (n <- names) {

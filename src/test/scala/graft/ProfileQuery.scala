@@ -1,39 +1,18 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Scratch profiler (test scope, not shipped): runs named queries with the
   * bench session config and reports job/stage/task counts and where the
   * task time goes. Usage:
-  *   sbt "Test/runMain graft.ProfileQuery <sfDir> <name> [name...]"
+  *   sbt "Test/runMain graft.ProfileQuery <sfDir> [conf:k=v ...] <name> [name...]"
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").foreach(d => b0.config("spark.local.dir", d))
-    val spark = b0
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("graft.scan.fanout", "auto")
-      .getOrCreate()
-    // extra session confs: SPARK_GRAFT_PROFILE_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.forHarness("graft-profile")
+    val names = ChecksumDump.applyConfArgs(spark, args.tail.toSeq)
 
     @volatile var jobs = 0
     @volatile var stages = 0

@@ -3,21 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per JVM via getOrCreate;
-  * config mirrors Verify's session incl. the ns-timestamp reading mode).
+/** Shared local SparkSession for all suites (one per JVM via getOrCreate),
+  * from the library factory. It reads no environment, and a fixed
+  * `local[4]` keeps results independent of the host's core count; UI off
+  * and the warehouse dir (a static conf) come from build.sbt's
+  * `javaOptions`.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        "/root/repo/target/test-warehouse") // static conf: set at build time
-      .getOrCreate()
+    val s = graft.core.GraftSession.create("local[4]", 4, "graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -87,7 +87,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("bucketed table: join on the bucket key plans without a shuffle") {
-    // warehouse dir is set (statically) in SparkSpec's session builder;
+    // warehouse dir is set (statically) in build.sbt's Test / javaOptions;
     // clear any leftover table + orphaned location from prior runs
     Seq("graft_bucketed_a", "graft_bucketed_b").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
