@@ -57,9 +57,17 @@ object Dedup {
     * column in its own projection, so it is evaluated once per row.
     * CollapseProject declines to inline multi-use non-trivial aliases, so
     * the staging survives optimization.
+    *
+    * Contract: the shingle array holds each shingle of a document at most
+    * once (the built-ins wrap theirs in `array_distinct`). ppjoin relies
+    * on it twice: its prefix length ceil(θ·n) counts array elements as n,
+    * which is the shingle-set size only when they are distinct, and it
+    * counts a pair's common shingles as `size(array_intersect(a, b))`,
+    * which is distinct. A custom Shingler that repeats shingles breaks
+    * both.
     */
   trait Shingler extends Serializable {
-    /** Returns (staged df, shingle-array column over it). */
+    /** Returns (staged df, distinct shingle-array column over it). */
     def stage(df: DataFrame, textCol: String): (DataFrame, Column)
   }
 

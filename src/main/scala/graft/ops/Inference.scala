@@ -47,26 +47,26 @@ object Inference {
                              location: String, numLabels: Int = 16)
 
   /** Deterministic stand-in for the pathologyBERT classifier: label k and
-    * score derived from the md5 hex of the input text. Identical results in
-    * Spark, DuckDB and Python — the oracle-checkability seam of SURVEY.md
-    * §5.1. Emits `LABEL_k` to preserve the reference's label surface
-    * (postprocessed by TextOps.splitIndex, T7).
+    * score derived from the first byte of the input text's md5 digest (the
+    * first two hex digits of md5(text)). Identical results in Spark, DuckDB
+    * and Python — the oracle-checkability seam of SURVEY.md §5.1. Emits
+    * `LABEL_k` to preserve the reference's label surface (postprocessed by
+    * TextOps.splitIndex, T7).
     */
   final class DeterministicClassifier(numLabels: Int) extends TextClassifier {
-    // The cached model instance is shared by all tasks on an executor, so
-    // per-call state only: MessageDigest is NOT thread-safe.
-    private def hex(s: String): String = {
-      val digest = java.security.MessageDigest.getInstance("MD5")
-      val d = digest.digest(s.getBytes("UTF-8"))
-      d.map(b => f"$b%02x").mkString
-    }
-    def predictBatch(texts: IndexedSeq[String]): IndexedSeq[(String, Double)] =
+    private val labels = Array.tabulate(numLabels)(k => s"LABEL_$k")
+    def predictBatch(texts: IndexedSeq[String]): IndexedSeq[(String, Double)] = {
+      // One digest per call, not per instance: the cached model instance is
+      // shared by all tasks on an executor, and MessageDigest is NOT
+      // thread-safe. digest() resets it for the next text.
+      val md5 = java.security.MessageDigest.getInstance("MD5")
       texts.map { t =>
-        val h = hex(if (t == null) "" else t)
-        val label = Integer.parseInt(h.substring(0, 1), 16) % numLabels
-        val score = Integer.parseInt(h.substring(1, 2), 16) / 15.0
-        (s"LABEL_$label", score)
+        val b = md5.digest((if (t == null) "" else t)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0)
+        // high nibble = first hex digit, low nibble = second
+        (labels(((b >> 4) & 0xf) % numLabels), (b & 0xf) / 15.0)
       }
+    }
   }
 
   /** Per-executor model cache: one model instance per (executor JVM,

@@ -2,25 +2,27 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.BlankRuns
 
 /** Scalar text/date/string operators (SURVEY.md §2.6, T1/T2/T6/T7/T8).
   *
-  * Everything here is a pure `Column => Column` chain of built-in functions —
-  * whole-stage-codegen'd by Catalyst, no UDFs — so these run at full native
-  * speed inside the scan/project stage at any scale. The reference applied
-  * each of these as a row-at-a-time pandas lambda
+  * Everything here is a `Column => Column` expression — built-in functions
+  * plus, for cleanMsg, graft's one-pass [[graft.functions.CollapseBlanks]]
+  * kernel — whole-stage-codegen'd by Catalyst, no UDFs, so these run at full
+  * native speed inside the scan/project stage at any scale. The reference
+  * applied each of these as a row-at-a-time pandas lambda
   * (reference: diagnostic_group_pipeline_with_api.py:131,301-303).
   */
 object TextOps {
 
   /** T1 — message cleaning (reference: clean_msg, applied at
     * diagnostic_group_pipeline_with_api.py:131). Normalizes raw report text:
-    * lowercase, control chars → space, collapse whitespace runs, trim.
-    * Regex subset is valid in both Java regex and RE2 so the DuckDB oracle
-    * can restate it exactly.
+    * lowercase, then one byte scan that folds every run of control chars
+    * and spaces (bytes 0x00-0x20) to one space and drops the run at either
+    * end. The DuckDB oracle states the same contract as a regex chain
+    * (`DxQueries.cleanSql`).
     */
-  def cleanMsg(c: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(c), "[\\x00-\\x1f]+", " "), "\\s+", " "))
+  def cleanMsg(c: Column): Column = BlankRuns.collapse(lower(c))
 
   /** T2 — basic regex clean (reference: data_prep.basic_reg, mvp_pipe.py:32):
     * strip everything that is not word char / whitespace / basic punctuation.

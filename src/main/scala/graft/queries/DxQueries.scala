@@ -10,7 +10,8 @@ import graft.pipelines.{DxGroup, Prostate}
   * (doc_id ↔ msgid, text ↔ message; FIXTURES.md §A).
   *
   * The oracle texts restate the exact operator semantics in DuckDB SQL:
-  * cleaning is the same Java∩RE2 regex chain, the classifier is the
+  * cleaning states cleanMsg's blank-folding contract as a regex chain
+  * (valid in both Java regex and RE2), the classifier is the
   * md5-arithmetic stand-in, truncation is the same token-slice logic.
   */
 object DxQueries {

@@ -250,10 +250,12 @@ object R2Queries {
             // identical values, same math (bench: 3.87 → 3.10 s best-of-2)
             percentile(col("value"), array(lit(0.45), lit(0.55)))
               .as("p4555"))
+        // joined back null-safely: a NULL event_type is a group of its
+        // own (as in the oracle's single GROUP BY), not dropped by `=`
         val exact = ev
-          .groupBy("event_type")
+          .groupBy(col("event_type").as("exact_type"))
           .agg(countDistinct(col("user_id")).as("exact_users"))
-        sketch.join(exact, Seq("event_type"))
+        sketch.join(exact, col("event_type") <=> col("exact_type"))
         .withColumn("p45", element_at(col("p4555"), 1))
         .withColumn("p55", element_at(col("p4555"), 2))
         .select(col("event_type"), col("n"), col("exact_users"),

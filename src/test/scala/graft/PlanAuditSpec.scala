@@ -47,6 +47,19 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"))
   }
 
+  test("dx_pipeline: cleanMsg is the one-pass kernel inside WholeStageCodegen, " +
+      "no regexp_replace") {
+    val p = plan("dx_pipeline")
+    assert(!p.contains("regexp_replace"), s"regex clean chain is back:\n$p")
+    assert(p.contains("collapseblanks"), s"expected the native kernel:\n$p")
+    assert(!p.contains("ScalaUDF") && !p.contains("BatchEvalPython"), p)
+    val df = SparkEntry.queries("dx_pipeline")(spark, SparkSpec.Sf0001)
+    df.collect()
+    val executed = df.queryExecution.executedPlan.toString
+    assert("\\*\\(\\d+\\) Project \\[[^\\n]*collapseblanks".r.findFirstIn(executed).isDefined,
+      s"expected the kernel in a codegen'd project:\n$executed")
+  }
+
   test("dedup_embedding: custom DotProduct expression is in the plan") {
     val p = plan("dedup_embedding")
     assert(p.contains("dotproduct") || p.contains("DotProduct"))

@@ -18,14 +18,29 @@ class InferenceSpec extends SparkSpec {
   }
 
   test("classify matches the SQL md5 formula (oracle seam)") {
-    val df = Seq.tabulate(50)(i => (i.toLong, s"text number $i")).toDF("msgid", "msg")
-    val viaOp = Inference.classify(df, "msg", spec)
-      .select($"msgid", $"predicted_label")
-    val viaSql = df.select($"msgid",
-      concat(lit("LABEL_"),
-        conv(substring(md5($"msg"), 1, 1), 16, 10).cast("long") % 16).as("expected"))
-    assert(viaOp.join(viaSql, "msgid")
-      .filter($"predicted_label" =!= $"expected").count() == 0)
+    // label and score, for 5 labels as well as 16; a NULL text hashes as ""
+    val df = (Seq.tabulate(200)(i => (i.toLong, s"text number $i")) :+ ((200L, null)))
+      .toDF("msgid", "msg")
+    val h = md5(coalesce($"msg", lit("")))
+    def nibble(pos: Int) = conv(substring(h, pos, 1), 16, 10).cast("long")
+    for (n <- Seq(5, 16)) {
+      val viaOp = Inference.classify(df, "msg", spec.copy(numLabels = n))
+        .select($"msgid", $"predicted_label", $"model_score")
+      val viaSql = df.select($"msgid",
+        concat(lit("LABEL_"), nibble(1) % n).as("label"),
+        (nibble(2) / 15.0).as("score"))
+      val joined = viaOp.join(viaSql, "msgid")
+      assert(joined.count() == 201)
+      val bad = joined
+        .filter($"predicted_label" =!= $"label" || $"model_score" =!= $"score")
+        .collect()
+      assert(bad.isEmpty, s"numLabels=$n: ${bad.take(5).mkString("; ")}")
+    }
+    // md5("") = d41d8cd9...: d = 13 -> LABEL_13 of 16, LABEL_3 of 5; 4/15
+    val nullRow = Inference.classify(df.filter($"msg".isNull), "msg",
+      spec.copy(numLabels = 5)).first()
+    assert(nullRow.getAs[String]("predicted_label") == "LABEL_3")
+    assert(nullRow.getAs[Double]("model_score") == 4 / 15.0)
   }
 
   test("model cache: one instance per spec key") {

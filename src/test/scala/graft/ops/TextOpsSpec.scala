@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -28,6 +29,36 @@ class TextOpsSpec extends SparkSpec {
     val df = cases.toDF("t").select(TextOps.cleanMsg($"t").as("once"))
       .withColumn("twice", TextOps.cleanMsg($"once"))
     assert(df.filter($"once" =!= $"twice").count() == 0)
+  }
+
+  /** The regex chain cleanMsg replaced; kept here only as the reference. */
+  private def regexClean(c: Column): Column =
+    trim(regexp_replace(regexp_replace(lower(c), "[\\x00-\\x1f]+", " "), "\\s+", " "))
+
+  test("cleanMsg equals the lower/regex/trim chain: 3000 generated strings, " +
+      "edge inputs, NULL and malformed UTF-8") {
+    val pieces = Seq("\t", "\r\n", "\r", "\n", "\u000B", "\f", "\u0000",
+      "\u001F", "\u007F", "\u00A0", "\u0085", "\u2003", "\u3000", "\u0130",
+      "\u03A3\u0391\u03A3", "\uD83D\uDE00", " ", "  ", "    ", "A", "b", "Word")
+    val texts = Gen.choose(0, 12)
+      .flatMap(k => Gen.listOfN(k, Gen.oneOf(pieces))).map(_.mkString)
+    val cases = samples(texts, 3000)
+    assert(cases.size >= 3000 && cases.distinct.size > 1000)
+    val edges = Seq[String]("a\tb", "", " ", "\t\r\n\u000B\f ", "\u0000\u001F",
+      " a ", "a\t", "\ta", "a \tb", "a\u007Fb", "A\u00A0B", null)
+    // malformed UTF-8: lone continuation, truncated lead, invalid bytes
+    val malformed = Seq(
+      Array[Byte](0x41, 0x80.toByte, 0x09, 0x42),
+      Array[Byte](0x20, 0xC3.toByte, 0x20, 0x20, 0x43),
+      Array[Byte](0xFF.toByte, 0x0A, 0xFE.toByte, 0x20),
+      Array[Byte](0xED.toByte, 0xA0.toByte, 0x80.toByte, 0x1F, 0x61),
+      Array[Byte](0xE2.toByte, 0x82.toByte, 0x09, 0x41))
+      .toDF("b").select($"b".cast("string").as("t"))
+    val bad = (cases ++ edges).toDF("t").unionByName(malformed)
+      .select($"t", TextOps.cleanMsg($"t").as("got"), regexClean($"t").as("want"))
+      .filter(!($"got" <=> $"want")).collect() // NULL-safe: NULL must map to NULL
+    assert(bad.isEmpty, bad.take(5).mkString("; "))
+    assert(clean1("a\tb") == "a b") // same length as the input, yet changed
   }
 
   test("basicReg strips non-word punctuation, keeps basic marks") {
