@@ -29,6 +29,11 @@ object Sections {
   /** The reference's section set (diagnostic_group_pipeline_with_api.py:
     * 176-187) keyed to markers that occur in clinical reports; unit-test
     * fixtures use the real `GROSS DESCRIPTION:` style headers.
+    *
+    * The headers are uppercase and case-sensitive, and `TextOps.cleanMsg`
+    * lowercases the text, so on cleaned text (what `DxGroup.prep` passes)
+    * no header ever matches: every section is `""` and `part_of_report` is
+    * `'entire report'`. Raw or uppercase text does match.
     */
   val clinicalSpecs: Seq[SectionSpec] = Seq(
     SectionSpec("gross", "(?s)GROSS DESCRIPTION:(.*?)(?:MICROSCOPIC:|DIAGNOSIS:|ADDENDUM:|COMMENT:|$)"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.WsTokens
 
 /** Text-analysis operators for large-scale training-data pipelines
   * (north-star extensions, BASELINE.json): language ID, quality scoring,
@@ -41,9 +42,8 @@ object TextAnalysis {
     }
   }
 
-  /** Whitespace token count (0 for blank text). */
-  def tokenCountWs(text: Column): Column =
-    when(trim(text) === "", lit(0)).otherwise(size(split(trim(text), "\\s+"))).cast("long")
+  /** Whitespace token count (0 for blank text), as a long. */
+  def tokenCountWs(text: Column): Column = WsTokens.count(text).cast("long")
 
   /** BPE-ish token count: runs of letters, runs of digits, and individual
     * punctuation marks each count as one token — the standard cheap

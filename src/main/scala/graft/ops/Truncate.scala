@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.WsTokens
 
 /** T5 — tokenizer-aware truncation (SURVEY.md §2.6; reference:
   * truncate_text, diagnostic_group_pipeline_with_api.py:49-69).
@@ -17,29 +18,29 @@ import org.apache.spark.sql.functions._
   * first/last-budget slicing contract, reproducible across engines. A real
   * subword tokenizer plugs in behind the same column contract.
   *
-  * Implementation is pure built-ins (`split`/`slice`/`concat_ws`/`when`) —
-  * codegen'd, no UDF, array ops stay inside WholeStageCodegen.
+  * Implementation is one byte pass per report, the codegen'd
+  * [[graft.functions.WsTokens]] kernel: it counts the tokens of
+  * `split(trim(t), "\\s+")` without building the token array, returns
+  * `trim(t)` when they fit, and builds the kept tokens only for a report
+  * over budget. No UDF; it stays inside WholeStageCodegen.
   */
 object Truncate {
 
   val ReferenceBudget = 510 // max_length 512 minus [CLS]/[SEP], dx_group.py:49-61
 
-  def tokenCount(text: Column): Column =
-    when(trim(text) === "", lit(0)).otherwise(size(split(trim(text), "\\s+")))
+  /** Whitespace tokens of `trim(text)`: 0 when blank, NULL for NULL. */
+  def tokenCount(text: Column): Column = WsTokens.count(text)
 
   /** Truncated text per the reference's branch logic. `budget` is the token
     * budget (510 in the reference; tests use small budgets so fixtures
-    * actually truncate).
+    * actually truncate). A NULL part keeps the first tokens; a NULL text
+    * gives `""`.
     */
-  def truncateText(text: Column, partOfReport: Column, budget: Int): Column = {
-    val toks = split(trim(text), "\\s+")
-    val n = size(toks)
-    val keepLast = concat_ws(" ", slice(toks, -budget, budget))
-    val keepFirst = concat_ws(" ", slice(toks, 1, budget))
-    when(n <= budget, trim(text))
-      .when(partOfReport === "entire report", keepLast)
-      .otherwise(keepFirst)
-  }
+  def truncateText(text: Column, partOfReport: Column, budget: Int): Column =
+    coalesce(
+      WsTokens.truncate(text,
+        coalesce(partOfReport === "entire report", lit(false)), budget),
+      lit(""))
 
   /** The api-pipeline variant also reports the cut point (reference returns
     * the character offset of the cut; the deterministic analog reports how

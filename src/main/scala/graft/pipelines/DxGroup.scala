@@ -34,6 +34,11 @@ object DxGroup {
   /** Stage 2 — prep (reference prep_data, :151-230): regex section split to
     * the `preped_data` schema (batch_id, msgid, sections…,
     * filtered_message, part_of_report).
+    *
+    * With the default `Sections.clinicalSpecs`, whose headers are
+    * uppercase, nothing matches the lowercased `msg` of [[clean]]: the
+    * default [[run]] always yields `part_of_report = 'entire report'` and
+    * `filtered_message = msg`, so truncation keeps the last tokens.
     */
   def prep(cleaned: DataFrame,
            specs: Seq[Sections.SectionSpec] = Sections.clinicalSpecs): DataFrame =

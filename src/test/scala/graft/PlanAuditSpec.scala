@@ -60,6 +60,19 @@ class PlanAuditSpec extends SparkSpec {
       s"expected the kernel in a codegen'd project:\n$executed")
   }
 
+  test("dx_pipeline: truncation is the one-pass token kernel inside " +
+      "WholeStageCodegen, no token array") {
+    val p = plan("dx_pipeline")
+    assert(!p.contains("slice(") && !"split\\([^\\n]*\\\\s\\+".r.findFirstIn(p).isDefined,
+      s"the split/slice truncation chain is back:\n$p")
+    assert(p.contains("truncatewstokens"), s"expected the native kernel:\n$p")
+    val df = SparkEntry.queries("dx_pipeline")(spark, SparkSpec.Sf0001)
+    df.collect()
+    val executed = df.queryExecution.executedPlan.toString
+    assert("\\*\\(\\d+\\) Project \\[[^\\n]*truncatewstokens".r.findFirstIn(executed).isDefined,
+      s"expected the kernel in a codegen'd project:\n$executed")
+  }
+
   test("dedup_embedding: custom DotProduct expression is in the plan") {
     val p = plan("dedup_embedding")
     assert(p.contains("dotproduct") || p.contains("DotProduct"))
