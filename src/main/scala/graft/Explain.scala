@@ -20,6 +20,7 @@ object Explain {
         val n = df.count()
         println(f"[$name] run$i: ${(System.nanoTime() - t0) / 1e9}%.3f s, $n rows")
       }
+      graft.core.Caches.releaseAll()
     }
     spark.stop()
   }

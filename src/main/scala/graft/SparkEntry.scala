@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{CachedPlanAqeHints, DxQueries, ExtQueries, FanoutHints, Q, R2Queries, R3Queries, R4Queries, R5Queries, R6Queries, R6bQueries, R7Queries, R7bQueries, R7cQueries, R7dQueries, R8Queries, R9Queries, R10Queries, R11Queries, R12Queries, R13Queries, R14Queries, R15Queries, R16Queries, R17Queries, R18Queries, R19Queries, R20Queries, R21Queries, R22Queries, R23Queries, R24Queries, R25Queries, R26Queries, R27Queries, R28Queries, R29Queries, R30Queries, R31Queries, R32Queries, R33Queries, R34Queries, R35Queries, Relational}
+import graft.core.QueryScope
+import graft.queries.{DxQueries, ExtQueries, Q, QueryHints, R2Queries, R3Queries, R4Queries, R5Queries, R6Queries, R6bQueries, R7Queries, R7bQueries, R7cQueries, R7dQueries, R8Queries, R9Queries, R10Queries, R11Queries, R12Queries, R13Queries, R14Queries, R15Queries, R16Queries, R17Queries, R18Queries, R19Queries, R20Queries, R21Queries, R22Queries, R23Queries, R24Queries, R25Queries, R26Queries, R27Queries, R28Queries, R29Queries, R30Queries, R31Queries, R32Queries, R33Queries, R34Queries, R35Queries, Relational}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -30,18 +31,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("dx_pipeline")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. Queries on
-    * the measured fan-out winner list (graft.queries.FanoutHints) are
-    * wrapped so Tables.fanout widens their low-split scans, and queries
-    * on the measured cached-plan-AQE winner list
-    * (graft.queries.CachedPlanAqeHints) construct with AQE-sized cache
-    * partitioning; everyone else runs bare (both full-suite A/Bs proved
-    * each rewrite a net loss as a default — flip_check geomean 0.836
-    * and 0.906 respectively).
+  /** One entry per implemented operator from SURVEY.md §2. Each query is
+    * constructed inside its own [[graft.core.QueryScope]], bound to its
+    * measured rewrite hints ([[graft.queries.QueryHints]]; none for most
+    * queries).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name ->
-      FanoutHints.wrap(q.name, CachedPlanAqeHints.wrap(q.name, q.run))).toMap
+    registry.map { q =>
+      val hints = QueryHints(q.name)
+      q.name -> ((spark: SparkSession, dir: String) =>
+        QueryScope.withHints(hints)(q.run(spark, dir)))
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

@@ -71,21 +71,16 @@ object GraftSession {
     *   - UI off;
     *   - map columns hashable, for the whole-row checksum action;
     *   - the two A/B toggles that `tools/flip_check.py` evidence depends
-    *     on. `SPARK_GRAFT_SCAN_FANOUT` sets `graft.scan.fanout`
-    *     ([[Tables]]) and `SPARK_GRAFT_CACHED_PLAN_AQE` sets the
-    *     [[CachedPlanAqe]] mode: "auto" (default) lets the measured
-    *     per-query winner lists decide; "true"/"false" force the rewrite
-    *     everywhere / nowhere. Forcing cached-plan AQE on means setting
-    *     the Spark key session-wide, since the wrapper stays out of the
-    *     way outside "auto".
+    *     on: `SPARK_GRAFT_SCAN_FANOUT` and `SPARK_GRAFT_CACHED_PLAN_AQE`
+    *     set the [[QueryScope]] modes: "auto" (default) lets the
+    *     measured per-query hints decide; "true"/"false" force the
+    *     rewrite everywhere (every read / every tracked cache) /
+    *     nowhere.
     */
-  private[graft] def harnessConf(env: Map[String, String]): Seq[(String, String)] = {
-    val cpa = env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "auto")
+  private[graft] def harnessConf(env: Map[String, String]): Seq[(String, String)] =
     Seq(
       "spark.ui.enabled" -> "false",
       "spark.sql.legacy.allowHashOnMapType" -> "true",
-      "graft.scan.fanout" -> env.getOrElse("SPARK_GRAFT_SCAN_FANOUT", "auto"),
-      CachedPlanAqe.ModeKey -> cpa,
-      CachedPlanAqe.SparkKey -> (cpa == "true").toString)
-  }
+      QueryScope.FanoutKey -> env.getOrElse("SPARK_GRAFT_SCAN_FANOUT", "auto"),
+      QueryScope.CachedPlanAqeKey -> env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "auto"))
 }

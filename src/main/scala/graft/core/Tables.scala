@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** Fixture-table readers (see /root/repo/TESTDATA.md, FIXTURES.md §A).
   *
@@ -16,8 +17,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    fanout(spark, spark.read.parquet(s"$sfDir/$name.parquet"),
-      s"$sfDir/$name.parquet")
+    fanout(spark, spark.read.parquet(s"$sfDir/$name.parquet"))
 
   /** Scan-parallelism floor for LOW-SPLIT inputs (optimization guide
     * §2.2/§6): parquet parallelism is bounded by file splits (and,
@@ -39,57 +39,39 @@ object Tables {
     * is OPT-IN per query:
     *
     *   - `graft.scan.fanout=auto` (default): fires only when the
-    *     calling query requested it (FanoutHint.requested — set by
-    *     SparkEntry for the measured winner queries).
+    *     query being constructed carries the fan-out hint
+    *     ([[QueryScope]], bound by SparkEntry for the measured winner
+    *     queries).
     *   - `=true` forces it for every read (A/B benchmarking aid);
-    *   - `=false` is the kill switch (beats any request).
+    *   - `=false` is the kill switch (beats any hint).
     *
     * Scale-adaptive by construction, not a local-mode constant: the
-    * trigger replicates Spark's own split sizing —
-    * `maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
-    * bytes/defaultParallelism))` (FilePartition.maxSplitBytes) — so a
-    * real corpus (thousands of splits at 100 TB) takes the zero-cost
-    * branch and the exchange never happens, and a mid-size table Spark
-    * already splits core-count-wide is left alone (the r16 ADVICE
-    * finding: the old `bytes/maxPartitionBytes` estimate ignored the
-    * bytes-per-core widening and would have exchanged a 512 MB table
-    * Spark had already split 32 ways). Filters and column pruning
-    * still reach the parquet scan — Catalyst pushes both through a
-    * Repartition — and the round-robin assignment is deterministic
+    * trigger reads the split count Spark itself plans for the read (the
+    * file scan's partitions: `FilePartition.maxSplitBytes`, which
+    * charges `openCostInBytes` per file, and its file packing), so a
+    * real corpus (thousands of splits at 100 TB), an input of many
+    * small files and a mid-size table Spark already splits
+    * core-count-wide all take the zero-cost branch (the r16 ADVICE
+    * finding: the old `bytes/maxPartitionBytes` estimate would have
+    * exchanged a 512 MB table Spark had already split 32 ways). A read
+    * that does not plan as a file scan is left alone. Filters and
+    * column pruning still reach the parquet scan — Catalyst pushes both
+    * through a Repartition — and the round-robin assignment is deterministic
     * (sort-before-repartition, fixed input split order), so table
     * CONTENTS are identical (row order changes; every declared query
     * is order-insensitive or totally ordered, which the oracle pins).
     * The floor `graft.scan.fanout.minBytes` (default 256 KiB) keeps
     * broadcast-dim lookups and sub-fixture-scale inputs exchange-free.
     */
-  private def fanout(spark: SparkSession, df: DataFrame,
-                     path: String): DataFrame = {
-    val on = spark.conf.get("graft.scan.fanout", "auto") match {
-      case "false" => false
-      case "true"  => true
-      case _       => FanoutHint.requested
-    }
-    if (!on) return df
-    val minBytes =
-      spark.conf.get("graft.scan.fanout.minBytes", "262144").toLong
+  private def fanout(spark: SparkSession, df: DataFrame): DataFrame = {
+    if (!QueryScope.fanout(spark)) return df
+    val minBytes = Config.confLong(spark, "graft.scan.fanout.minBytes", 262144L)
     val target = spark.sparkContext.defaultParallelism
-    val bytes =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.getContentSummary(p).getLength
-      } catch { case _: Exception => return df }
-    if (bytes < minBytes) return df
-    // Spark's effective split size (FilePartition.maxSplitBytes): small
-    // inputs are split FINER than maxPartitionBytes (down to openCost)
-    // so they already approach core-count splits; estimate with the
-    // same formula or the trigger fires on tables that are not narrow.
-    val conf = spark.sessionState.conf
-    val bytesPerCore = bytes / math.max(1, target)
-    val maxSplit = math.min(conf.filesMaxPartitionBytes,
-      math.max(conf.filesOpenCostInBytes, bytesPerCore))
-    val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    if (splits >= target) df else df.repartition(target)
+    df.queryExecution.sparkPlan.collectFirst { case s: FileSourceScanExec => s } match {
+      case Some(scan) if scan.relation.location.sizeInBytes >= minBytes &&
+          scan.inputRDD.getNumPartitions < target => df.repartition(target)
+      case _ => df
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")

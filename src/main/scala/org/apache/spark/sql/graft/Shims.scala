@@ -130,4 +130,12 @@ object Shims {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A new session over the same context and cache registry, with a
+    * copy of `spark`'s session state (`cloneSession` is `private[sql]`):
+    * confs set on the clone never reach `spark`.
+    */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.classic.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

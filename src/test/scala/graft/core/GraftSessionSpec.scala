@@ -23,16 +23,16 @@ class GraftSessionSpec extends SparkSpec {
     val unset = GraftSession.harnessConf(Map.empty).toMap
     assert(unset("spark.ui.enabled") == "false")
     assert(unset("spark.sql.legacy.allowHashOnMapType") == "true")
-    assert(unset("graft.scan.fanout") == "auto")
-    assert(unset(CachedPlanAqe.ModeKey) == "auto")
-    assert(unset(CachedPlanAqe.SparkKey) == "false")
+    assert(unset(QueryScope.FanoutKey) == "auto")
+    assert(unset(QueryScope.CachedPlanAqeKey) == "auto")
     Seq("auto", "true", "false").foreach { v =>
       val m = GraftSession.harnessConf(Map(
         "SPARK_GRAFT_SCAN_FANOUT" -> v,
         "SPARK_GRAFT_CACHED_PLAN_AQE" -> v)).toMap
-      assert(m("graft.scan.fanout") == v)
-      assert(m(CachedPlanAqe.ModeKey) == v)
-      assert(m(CachedPlanAqe.SparkKey) == (v == "true").toString)
+      assert(m(QueryScope.FanoutKey) == v)
+      assert(m(QueryScope.CachedPlanAqeKey) == v)
+      assert(m.keySet.forall(!_.startsWith("spark.sql.optimizer.")),
+        "the cached-plan mode must not become a session-wide Spark conf")
     }
   }
 

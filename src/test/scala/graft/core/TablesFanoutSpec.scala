@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions.col
 
 /** Pins the scan fan-out contract (Tables.fanout): OPT-IN per query
-  * (default mode "auto" fires only under FanoutHint.withFanout — the
+  * (default mode "auto" fires only under a fan-out hint — the
   * r16 A/B proved default-on is a net suite pessimization), fires only
   * below the cores-worth-of-splits threshold and above the byte floor,
   * is plan-visible as one round-robin exchange, and never changes
@@ -15,6 +15,9 @@ import org.apache.spark.sql.functions.col
   * running in parallel against the shared session's conf.
   */
 class TablesFanoutSpec extends SparkSpec {
+
+  private def fanoutHinted[T](body: => T): T =
+    QueryScope.withHints(Hints(fanout = true))(body)
 
   test("default mode (auto) with no request leaves the scan untouched") {
     val s = spark.newSession()
@@ -27,7 +30,7 @@ class TablesFanoutSpec extends SparkSpec {
   test("below the byte floor the scan is untouched even when requested") {
     val s = spark.newSession()
     // sf0.001 documents is ~64 KiB < the 256 KiB default floor
-    val df = FanoutHint.withFanout(Tables.documents(s, SparkSpec.Sf0001))
+    val df = fanoutHinted(Tables.documents(s, SparkSpec.Sf0001))
     assert(df.rdd.getNumPartitions == 1,
       "sub-floor scan must stay a bare single-split read")
   }
@@ -36,7 +39,7 @@ class TablesFanoutSpec extends SparkSpec {
       "scan fans out to defaultParallelism and contents are identical") {
     val s = spark.newSession()
     s.conf.set("graft.scan.fanout.minBytes", "1")
-    val fanned = FanoutHint.withFanout(Tables.documents(s, SparkSpec.Sf0001))
+    val fanned = fanoutHinted(Tables.documents(s, SparkSpec.Sf0001))
     assert(fanned.rdd.getNumPartitions ==
       s.sparkContext.defaultParallelism,
       "low-split scan must widen to the core count")
@@ -52,7 +55,7 @@ class TablesFanoutSpec extends SparkSpec {
     val s = spark.newSession()
     s.conf.set("graft.scan.fanout.minBytes", "1")
     def perPartition(): Seq[(Int, Seq[Long])] =
-      FanoutHint.withFanout(Tables.documents(s, SparkSpec.Sf0001))
+      fanoutHinted(Tables.documents(s, SparkSpec.Sf0001))
         .select(col("doc_id")).rdd
         .mapPartitionsWithIndex { case (i, it) =>
           Iterator((i, it.map(_.getLong(0)).toSeq.sorted))
@@ -65,7 +68,7 @@ class TablesFanoutSpec extends SparkSpec {
     val s = spark.newSession()
     s.conf.set("graft.scan.fanout", "false")
     s.conf.set("graft.scan.fanout.minBytes", "1")
-    val df = FanoutHint.withFanout(Tables.documents(s, SparkSpec.Sf0001))
+    val df = fanoutHinted(Tables.documents(s, SparkSpec.Sf0001))
     assert(df.rdd.getNumPartitions == 1)
   }
 
@@ -85,9 +88,38 @@ class TablesFanoutSpec extends SparkSpec {
     // core-count wide (maxSplitBytes = max(openCost, bytes/cores));
     // the estimator must see that and skip the exchange.
     s.conf.set("spark.sql.files.openCostInBytes", "1")
-    val df = FanoutHint.withFanout(Tables.documents(s, SparkSpec.Sf0001))
+    val df = fanoutHinted(Tables.documents(s, SparkSpec.Sf0001))
     assert(df.rdd.getNumPartitions >= s.sparkContext.defaultParallelism)
     assert(!df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning"),
       "already-wide scan must not pay a round-robin exchange")
+  }
+
+  test("many small files, which Spark already reads core-count wide, are " +
+      "left alone (openCostInBytes is charged per file)") {
+    val s = spark.newSession()
+    s.conf.set("graft.scan.fanout.minBytes", "1")
+    val dir = java.nio.file.Files.createTempDirectory("fanout-files").toString
+    try {
+      val n = 2 * s.sparkContext.defaultParallelism
+      Tables.documents(s, SparkSpec.Sf0001).repartition(n)
+        .write.parquet(s"$dir/documents.parquet")
+      val df = fanoutHinted(Tables.table(s, dir, "documents"))
+      assert(df.rdd.getNumPartitions >= s.sparkContext.defaultParallelism)
+      assert(!df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning"),
+        "a multi-file scan Spark already splits wide must not pay a round-robin exchange")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("a malformed graft.scan.fanout or graft.scan.fanout.minBytes fails naming the key") {
+    val s = spark.newSession()
+    s.conf.set("graft.scan.fanout", "ture")
+    val mode = intercept[IllegalArgumentException](
+      Tables.documents(s, SparkSpec.Sf0001))
+    assert(mode.getMessage.contains("graft.scan.fanout"))
+    s.conf.set("graft.scan.fanout", "auto")
+    s.conf.set("graft.scan.fanout.minBytes", "256k")
+    val floor = intercept[IllegalArgumentException](
+      fanoutHinted(Tables.documents(s, SparkSpec.Sf0001)))
+    assert(floor.getMessage.contains("graft.scan.fanout.minBytes"))
   }
 }

@@ -1,16 +1,17 @@
 #!/usr/bin/env python3
-"""Re-derive the FanoutHints winner list from a committed bench A/B pair.
+"""Re-derive the r16 scan fan-out winner list from a committed bench A/B pair.
 
 Usage: tools/fanout_winners.py [baseline.json] [treatment.json]
 
-Selection rule (the one that produced graft/queries/FanoutHints.scala):
+Selection rule (the one that produced the r16 block of the `fanout` set in
+src/main/scala/graft/queries/QueryHints.scala):
 a query is a winner iff, over the two full-suite best-of-pass records,
     treatment_best / max(baseline_best, 0.1)  <= 0.75
 and baseline_best - treatment_best           >= 0.1 s.
 
 Defaults to the r16 pair so the shipped list is reproducible:
     tools/fanout_winners.py
-prints the exact Set literal in FanoutHints.scala.
+prints the exact r16 block of that set.
 """
 import json
 import math
