@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: print the formatted physical plan + two timed runs for the
-  * given query names (all queries if none given). Usage:
+  * given query names (all queries if none given). Building a query can
+  * run Spark jobs before the plan prints (`Tables` schema inference,
+  * `Broadcasts.bounded`'s count, `Curation.stageBarrier`). Usage:
   *   sbt "runMain graft.Explain [sfDir] [name ...]"
   */
 object Explain {

@@ -1,7 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** K2/O6 — batch/lineage bookkeeping (SURVEY.md §2.2, §2.8).
   *
@@ -11,103 +13,79 @@ import org.apache.spark.sql.functions._
   * row (reference: conn.insert_row(table_name="batch", ...),
   * diagnostic_group_pipeline_with_api.py:104-132).
   *
-  * In a lake-only deployment there is no serial column, so the ledger is a
-  * small parquet table owned by the driver: allocate `max(batch_id)+1`,
-  * append the new row. Single-driver ⇒ race-free; on a shared lake this
-  * would sit behind a transactional table format, same API. Observable
-  * semantics match `INSERT ... RETURNING batch_id` (SURVEY.md §7.3).
+  * Lake-only, the ledger is a directory of marker files `batch_<id>`,
+  * each holding its run row. [[newBatch]] creates the marker of the
+  * listed max id + 1 with `overwrite = false`; neither it nor [[history]]
+  * starts a Spark job. Same observable semantics as `INSERT ... RETURNING batch_id`
+  * (SURVEY.md §7.3).
+  *
+  * Single-driver contract: allocation holds a JVM-wide lock, so threads
+  * and instances in one driver get distinct, dense ids. The `overwrite =
+  * false` refusal is exclusive across drivers on HDFS but not on
+  * `file://` (Hadoop 3.4.2: 8 threads creating one path had more than one
+  * winner in 286 and 245 of 300 rounds); a shared ledger belongs behind a
+  * transactional table format, same API.
+  *
+  * A crash between create and write leaves an empty marker: its id stays
+  * allocated and [[history]] lists it with null fields. A parquet ledger
+  * of the earlier format at the path (`part-*`, no markers) fails naming
+  * the path, since restarting at id 1 would turn new batches into
+  * replays for idempotent sinks.
   */
-final class BatchLedger(spark: SparkSession, ledgerPath: String,
-                        maxFragments: Int = 16) {
+final class BatchLedger(spark: SparkSession, ledgerPath: String) {
+  import BatchLedger._
 
-  private def existing: Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(ledgerPath)
-      if (df.columns.contains("batch_id")) Some(df) else None
-    } catch {
-      // only "no ledger yet" is a normal first run; real failures
-      // (permissions, corrupt files, OOM) must propagate
-      case _: org.apache.spark.sql.AnalysisException => None
-    }
+  private def fs = IndexCommits.fs(spark, ledgerPath)
+  private def marker(id: Long) = new Path(ledgerPath, s"$Prefix$id")
 
-  private def hadoopPath = new org.apache.hadoop.fs.Path(ledgerPath)
-  private def fs = hadoopPath.getFileSystem(
-    spark.sparkContext.hadoopConfiguration)
-
-  private def fragmentCount: Int =
-    try fs.listStatus(hadoopPath)
-      .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    catch { case _: java.io.FileNotFoundException => 0 }
-
-  private def tmpPath = new org.apache.hadoop.fs.Path(
-    ledgerPath.stripSuffix("/") + "__compact_tmp")
-
-  /** Crash recovery for the compaction swap: a driver that died between
-    * `delete(ledger)` and `rename(tmp, ledger)` leaves ONLY the tmp copy
-    * — without this step the next allocation would see "no ledger" and
-    * silently restart at batch_id 1, making idempotent sinks treat new
-    * batches as replays (data loss). Tmp present + ledger missing ⇒ the
-    * tmp copy IS the ledger: rename it back. Tmp present + ledger intact
-    * ⇒ the crash happened before the delete; the tmp copy is stale —
-    * drop it.
-    */
-  private def recoverCompaction(): Unit = {
-    val t = tmpPath
-    if (fs.exists(t)) {
-      if (!fs.exists(hadoopPath)) {
-        if (!fs.rename(t, hadoopPath))
-          throw new java.io.IOException(
-            s"ledger compaction recovery rename failed: $t -> $ledgerPath")
-      } else {
-        fs.delete(t, true)
-      }
-    }
-  }
-
-  /** Rewrite the append-only ledger directory into ONE file once it
-    * accretes more than `maxFragments` part-files: every allocation reads
-    * max(batch_id) over the whole directory, so an unbounded fragment
-    * count slowly turns an O(1) footer-stats read into an O(runs) file
-    * listing + open storm. Compaction keeps the allocation read bounded
-    * regardless of how many batches have ever run. Single-driver ledger
-    * (class contract), so the rewrite cannot race an allocator; the
-    * temp-write → delete → rename sequence leaves a `__compact_tmp` copy
-    * that [[recoverCompaction]] (run before every allocation and read)
-    * renames back if the driver dies mid-swap.
-    */
-  private def compactIfNeeded(): Unit = if (fragmentCount > maxFragments) {
-    val tmp = tmpPath
-    existing.foreach { df =>
-      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      fs.delete(hadoopPath, true)
-      if (!fs.rename(tmp, hadoopPath))
-        throw new java.io.IOException(
-          s"ledger compaction rename failed: $tmp -> $ledgerPath")
-    }
+  /** Every allocated id, ascending. */
+  private def ids: Seq[Long] = {
+    val names =
+      try fs.listStatus(new Path(ledgerPath)).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val found = names.flatMap(IndexCommits.parseMarker(_, Seq(Prefix))).map(_._2)
+    if (found.isEmpty && names.exists(_.startsWith("part-")))
+      throw new IllegalStateException(
+        s"$ledgerPath holds a parquet batch ledger of the earlier format; " +
+          "move it aside or point the ledger at a new path")
+    found.sorted
   }
 
   /** Allocate the next batch id and durably record the run row. */
   def newBatch(pipelineName: String, dateFrom: String, dateTo: String,
-               comment: String): Long = {
-    recoverCompaction()
-    compactIfNeeded()
-    val nextId: Long = existing
-      .flatMap(df => Option(df.agg(max("batch_id")).first().get(0)))
-      .map(_.asInstanceOf[Long] + 1L).getOrElse(1L)
-    import spark.implicits._
-    Seq((nextId, pipelineName, dateFrom, dateTo, comment))
-      .toDF("batch_id", "pipeline_name", "date_from", "date_to", "comment")
-      .write.mode(SaveMode.Append).parquet(ledgerPath)
-    nextId
+               comment: String): Long = BatchLedger.synchronized {
+    val id = ids.lastOption.fold(1L)(_ + 1L)
+    val out = fs.create(marker(id), false)
+    try Seq(pipelineName, dateFrom, dateTo, comment).foreach { s =>
+      if (s == null) out.writeInt(-1)
+      else { out.writeInt(s.length); out.writeChars(s) }
+    } finally out.close()
+    id
   }
 
+  /** Every batch's run row (`batch_id` plus four strings), by id. */
   def history: DataFrame = {
-    recoverCompaction()
-    existing.getOrElse(spark.emptyDataFrame)
+    val f = fs
+    val rows = ids.map { id =>
+      val in = f.open(marker(id))
+      val fields =
+        try Seq.fill(4) {
+          val n = in.readInt()
+          if (n < 0) null else Seq.fill(n)(in.readChar()).mkString
+        } catch { case _: java.io.EOFException => Seq.fill(4)(null) }
+        finally in.close()
+      Row.fromSeq(id +: fields)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), Schema)
   }
 }
 
 object BatchLedger {
+  private val Prefix = "batch_"
+
+  private val Schema = StructType.fromDDL("batch_id BIGINT, " +
+    "pipeline_name STRING, date_from STRING, date_to STRING, comment STRING")
+
   /** O6 — stamp a batch id onto every row of a stage output
     * (reference: data["batch_id"] = batch_id,
     * diagnostic_group_pipeline_with_api.py:132).

@@ -446,8 +446,8 @@ object R8Queries {
         "(batch 0), append the odd-id half (batch 1), then serve " +
         "as-of batch 0 — only commit markers with id <= asOf replay, " +
         "so the query sees the index exactly as a reader did after " +
-        "batch 0 committed (sound because batch ids are monotone, the " +
-        "BatchLedger contract; vacuum is the retention horizon, the " +
+        "batch 0 committed (sound because the caller assigns monotone " +
+        "batch ids; vacuum is the retention horizon, the " +
         "same trade every lakehouse table format makes). The oracle is " +
         "BM25 over only the even-id documents — time travel must equal " +
         "a fresh build of the as-of corpus.",

@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.SparkSpec
 import graft.core.{BatchLedger, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 class PipelinesSpec extends SparkSpec {
   import spark.implicits._
@@ -109,48 +110,84 @@ class PipelinesSpec extends SparkSpec {
       .as[Long].first() == 2L)
   }
 
-  test("BatchLedger compacts past maxFragments: bounded files, ids and history intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ledger_c").toString
-    val path = s"$dir/ledger"
-    val ledger = new BatchLedger(spark, path, maxFragments = 4)
-    val ids = (1 to 12).map(i => ledger.newBatch("p", "20220101", "20230101", s"c$i"))
-    assert(ids == (1L to 12L)) // allocation survives every compaction
-    assert(ledger.history.count() == 12)
-    assert(ledger.history.select("comment").as[String].collect().toSet ==
-      (1 to 12).map(i => s"c$i").toSet)
-    // the directory never grows without bound: after the last allocation
-    // at most maxFragments+1 part-files remain (one compacted + appends)
-    val parts = new java.io.File(path).listFiles()
-      .count(f => f.isFile && f.getName.startsWith("part-"))
-    assert(parts <= 5, s"ledger fragment count unbounded: $parts files")
-    // and no stray compaction temp directory is left behind
-    assert(!new java.io.File(s"${path}__compact_tmp").exists())
+  private def ledgerDir(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).toString + "/ledger"
+
+  test("BatchLedger allocates and builds its history without a Spark job") {
+    val sc = spark.sparkContext
+    val group = "ledger-no-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "ledger")
+    try {
+      val ledger = new BatchLedger(spark, ledgerDir("graft_ledger_j"))
+      (1 to 3).foreach(i => ledger.newBatch("p", "20220101", "20230101", s"c$i"))
+      val history = ledger.history
+      org.apache.spark.sql.graft.Shims.drainListenerBus(sc)
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs in newBatch/history")
+      assert(history.schema == StructType(StructField("batch_id", LongType) +:
+        Seq("pipeline_name", "date_from", "date_to", "comment")
+          .map(StructField(_, StringType))))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
-  test("BatchLedger recovers a compaction swap that crashed mid-rename") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ledger_r").toString
-    val path = s"$dir/ledger"
+  test("BatchLedger gives 8 concurrent allocators distinct, dense ids") {
+    val path = ledgerDir("graft_ledger_t")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = (1 to 8).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+          def call(): Seq[Long] = {
+            val ledger = new BatchLedger(spark, path)
+            (1 to 25).map(i => ledger.newBatch("p", "20220101", "20230101", s"t$t-$i"))
+          }
+        })
+      }
+      val ids = futures.flatMap(_.get())
+      assert(ids.sorted == (1L to 200L))
+      assert(new BatchLedger(spark, path).history.count() == 200)
+    } finally pool.shutdown()
+  }
+
+  test("BatchLedger keeps the id of an empty marker left by a crash") {
+    val path = ledgerDir("graft_ledger_e")
     val ledger = new BatchLedger(spark, path)
-    (1 to 3).foreach(i => ledger.newBatch("p", "20220101", "20230101", s"c$i"))
-    // crash between delete(ledger) and rename(tmp, ledger): only the tmp
-    // copy exists — exactly what a mid-swap driver death leaves behind
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(s"${path}__compact_tmp")
-    assert(fs.rename(p, tmp))
-    assert(!new java.io.File(path).exists())
-    // next allocation must recover the ledger and CONTINUE the sequence —
-    // a silent restart at 1 would alias new batches onto replayed ids
-    val id4 = ledger.newBatch("p", "20220101", "20230101", "c4")
-    assert(id4 == 4L, s"expected recovery to id 4, got $id4")
-    assert(ledger.history.count() == 4)
-    assert(!new java.io.File(s"${path}__compact_tmp").exists())
-    // crash BEFORE the delete: tmp copy beside an intact ledger is stale
-    // and gets dropped, allocation unaffected
-    fs.mkdirs(tmp)
-    val id5 = ledger.newBatch("p", "20220101", "20230101", "c5")
-    assert(id5 == 5L)
-    assert(!new java.io.File(s"${path}__compact_tmp").exists())
+    (1 to 2).foreach(i => ledger.newBatch("p", "20220101", "20230101", s"c$i"))
+    // a crash between creating a marker and writing its row
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(path, "batch_3"))
+    assert(ledger.newBatch("p", "20220101", "20230101", "c4") == 4L)
+    val rows = ledger.history.as[(Long, String, String, String, String)].collect()
+    assert(rows.map(_._1).toSeq == Seq(1L, 2L, 3L, 4L))
+    assert(rows(2) == ((3L, null, null, null, null)))
+    assert(rows(3)._5 == "c4")
+  }
+
+  test("BatchLedger round-trips newlines, tabs and non-ASCII text") {
+    val ledger = new BatchLedger(spark, ledgerDir("graft_ledger_u"))
+    val comment = "line one\nline two\tcol — Zürich 日本語 \uD83D\uDE00 \"q\" \\"
+    val id = ledger.newBatch("DX Group\t", "", "2023-01-01", comment)
+    assert(ledger.history.as[(Long, String, String, String, String)]
+      .collect().toSeq == Seq((id, "DX Group\t", "", "2023-01-01", comment)))
+  }
+
+  test("BatchLedger refuses a parquet ledger of the earlier format") {
+    val path = ledgerDir("graft_ledger_l")
+    Seq((1L, "p", "20220101", "20230101", "c1"))
+      .toDF("batch_id", "pipeline_name", "date_from", "date_to", "comment")
+      .write.parquet(path)
+    val ledger = new BatchLedger(spark, path)
+    val e = intercept[IllegalStateException](
+      ledger.newBatch("p", "20220101", "20230101", "c2"))
+    assert(e.getMessage.contains(path))
   }
 }
