@@ -80,19 +80,12 @@ object Bench {
     // for one-off idle-host re-times of a single query without paying the
     // 300-query suite. Not used by the driver (full-suite records only).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries: Seq[(String, (SparkSession, String) => DataFrame)] =
-      SparkEntry.queries.toSeq.filter { case (n, _) => only.forall(_(n)) }
-    // fail fast on a typo'd filter: a zero-match subset would otherwise
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    // select fails fast on a typo'd filter: a zero-match subset would otherwise
     // bench nothing and still emit a record with n_done=0
-    only.foreach { o =>
-      require(queries.nonEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY matched no queries: ${o.mkString(", ")}")
-      val unmatched = o.diff(queries.map(_._1).toSet)
-      require(unmatched.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: " +
-          unmatched.toSeq.sorted.mkString(", "))
-    }
+    val selected = SparkEntry.select(only).toSet
+    val queries: Seq[(String, (SparkSession, String) => DataFrame)] =
+      SparkEntry.queries.toSeq.filter { case (n, _) => selected(n) }
     val names = queries.map(_._1)
     val timedOut = collection.mutable.Set.empty[String]
     var canaryBefore = -1.0

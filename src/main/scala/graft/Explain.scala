@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.ExplainMode
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.select(if (args.length > 1) Some(args.tail.toSeq) else None)
     val spark = graft.core.GraftSession.forHarness("graft-explain")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -2,28 +2,50 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.QueryScope
-import graft.queries.{DxQueries, ExtQueries, Q, QueryHints, R2Queries, R3Queries, R4Queries, R5Queries, R6Queries, R6bQueries, R7Queries, R7bQueries, R7cQueries, R7dQueries, R8Queries, R9Queries, R10Queries, R11Queries, R12Queries, R13Queries, R14Queries, R15Queries, R16Queries, R17Queries, R18Queries, R19Queries, R20Queries, R21Queries, R22Queries, R23Queries, R24Queries, R25Queries, R26Queries, R27Queries, R28Queries, R29Queries, R30Queries, R31Queries, R32Queries, R33Queries, R34Queries, R35Queries, Relational}
+import graft.queries.{DedupQueries, DocQueries, DqQueries, DxQueries, ErQueries, EvQueries,
+  GraphQueries, LakeQueries, MlQueries, MmQueries, Q, QueryHints, Relational, SimQueries,
+  StreamQueries, TaQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Queries live in graft.queries.* as [[graft.queries.Q]] values that pair
   * each Spark implementation with its DuckDB oracle SQL (kept side by side
   * so the two can never drift apart silently); this object just flattens
   * the registry into the driver's two maps.
+  *
+  * The catalog is filed by operator family, and a query's name prefix
+  * names its object: `q*` in `Relational`; `dx_*` and `prostate_fanin` in
+  * `DxQueries`; `ta_`, `sim_`, `ev_`, `dedup_`, `stream_`, `dq_`, `doc_`,
+  * `graph_`, `mm_`, `ml_` and `er_` each in the matching `<Prefix>Queries`
+  * (`DocQueries` also holds `curation_pipeline` and `pretrain_pipeline`);
+  * `lake_`, `src_`, `cdc_` and `inc_` in `LakeQueries`. A helper that more
+  * than one family uses lives in `Queries.scala`: SQL fragments in
+  * `OracleCompat`, Spark-side fixtures in `QueryFixtures`.
   */
 object SparkEntry {
 
   def registry: Seq[Q] =
-    Relational.all ++ DxQueries.all ++ ExtQueries.all ++ R2Queries.all ++
-      R3Queries.all ++ R4Queries.all ++ R5Queries.all ++ R6Queries.all ++
-      R6bQueries.all ++ R7Queries.all ++ R7bQueries.all ++ R7cQueries.all ++
-      R7dQueries.all ++ R8Queries.all ++ R9Queries.all ++ R10Queries.all ++
-      R11Queries.all ++ R12Queries.all ++ R13Queries.all ++ R14Queries.all ++
-      R15Queries.all ++ R16Queries.all ++ R17Queries.all ++ R18Queries.all ++
-      R19Queries.all ++ R20Queries.all ++ R21Queries.all ++ R22Queries.all ++ R23Queries.all ++
-      R24Queries.all ++ R25Queries.all ++ R26Queries.all ++ R27Queries.all ++ R28Queries.all ++ R29Queries.all ++ R30Queries.all ++
-      R31Queries.all ++ R32Queries.all ++ R33Queries.all ++ R34Queries.all ++
-      R35Queries.all
+    Relational.all ++ DxQueries.all ++ TaQueries.all ++ SimQueries.all ++
+      EvQueries.all ++ DedupQueries.all ++ StreamQueries.all ++ DqQueries.all ++
+      DocQueries.all ++ GraphQueries.all ++ MmQueries.all ++ MlQueries.all ++
+      ErQueries.all ++ LakeQueries.all
+
+  /** The query names a harness runs: every registry query, sorted, for
+    * `None`; for `Some(names)` exactly those, in the order given. Fails
+    * on an empty selection and on any name the registry does not hold,
+    * listing every unknown name, so a typo cannot run nothing silently.
+    */
+  def select(only: Option[Seq[String]]): Seq[String] = {
+    val known = registry.map(_.name)
+    only match {
+      case None => known.sorted
+      case Some(names) =>
+        require(names.nonEmpty, "empty query selection: name at least one query")
+        val unknown = names.filterNot(known.toSet).distinct
+        require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+        names.distinct
+    }
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The full DX-group pipeline (SURVEY.md §3.1) over the documents table.

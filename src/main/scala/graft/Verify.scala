@@ -81,10 +81,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (dev iteration)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    def keep(name: String) = only.forall(_.contains(name))
+    // optional 3rd arg: comma-separated query-name filter (dev iteration);
+    // an unknown name fails the run instead of verifying nothing
+    val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val keep = SparkEntry.select(only).toSet
     // same factory and A/B toggles as Bench, so Verify exercises the
     // exact physical shape Bench times
     val spark = GraftSession.forHarness("graft-verify")

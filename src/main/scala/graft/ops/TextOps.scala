@@ -20,7 +20,7 @@ object TextOps {
     * lowercase, then one byte scan that folds every run of control chars
     * and spaces (bytes 0x00-0x20) to one space and drops the run at either
     * end. The DuckDB oracle states the same contract as a regex chain
-    * (`DxQueries.cleanSql`).
+    * (`OracleCompat.cleanSql`).
     */
   def cleanMsg(c: Column): Column = BlankRuns.collapse(lower(c))
 

@@ -1,9 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.{Inference, Sections, TextOps, Truncate}
 import graft.pipelines.{DxGroup, Prostate}
+import graft.queries.OracleCompat.cleanSql
 
 /** The DX-group / prostate pipeline surface (SURVEY.md §2.6-§2.8, §3) as
   * oracle-checkable queries over the `documents` fixture
@@ -16,9 +18,10 @@ import graft.pipelines.{DxGroup, Prostate}
   */
 object DxQueries {
 
-  /** DuckDB restatement of TextOps.cleanMsg. */
-  private val cleanSql =
-    """trim(regexp_replace(regexp_replace(lower(text), '[\x00-\x1f]+', ' ', 'g'), '\s+', ' ', 'g'))"""
+  /** The documents fixture as DX messages: `msgid` plus the cleaned `msg`. */
+  private def cleanedDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id").as("msgid"), TextOps.cleanMsg(col("text")).as("msg"))
 
   /** Section specs keyed to the synthetic fixture vocabulary so extraction
     * is non-trivial in the harness (the clinical header specs in
@@ -65,9 +68,7 @@ object DxQueries {
     Q("dx_clean",
       "T1 — message cleaning as a codegen'd regex chain on the scan " +
         "(no UDF; reference did row-wise pandas apply).",
-      (s, d) => Tables.documents(s, d)
-        .select(col("doc_id").as("msgid"), TextOps.cleanMsg(col("text")).as("msg"))
-        .orderBy("msgid"),
+      (s, d) => cleanedDocs(s, d).orderBy("msgid"),
       Some(s"""SELECT doc_id AS msgid, $cleanSql AS msg
               |FROM documents ORDER BY msgid""".stripMargin)),
 
@@ -77,8 +78,7 @@ object DxQueries {
         "regexp_extract expressions, patterns inlined from the (tiny) " +
         "section_regex dimension.",
       (s, d) => {
-        val cleaned = Tables.documents(s, d)
-          .select(col("doc_id").as("msgid"), TextOps.cleanMsg(col("text")).as("msg"))
+        val cleaned = cleanedDocs(s, d)
         Sections.createSections(cleaned, "msg", fixtureSpecs)
           .select("msgid", "gross", "micro", "diagnosis", "diagnosis_comment",
             "addendum", "part_of_report", "filtered_message")
@@ -94,8 +94,7 @@ object DxQueries {
         "truncate): keep-last for 'entire report', keep-first otherwise; " +
         "pure array expressions inside codegen.",
       (s, d) => {
-        val cleaned = Tables.documents(s, d)
-          .select(col("doc_id").as("msgid"), TextOps.cleanMsg(col("text")).as("msg"))
+        val cleaned = cleanedDocs(s, d)
         Sections.createSections(cleaned, "msg", fixtureSpecs)
           .select(col("msgid"), col("part_of_report"),
             Truncate.tokenCount(col("filtered_message")).cast("long").as("n_tokens"),
@@ -123,8 +122,7 @@ object DxQueries {
       "M1 — batched mapPartitions inference with a per-executor model " +
         "cache; deterministic md5 stand-in keeps it oracle-checkable.",
       (s, d) => {
-        val cleaned = Tables.documents(s, d)
-          .select(col("doc_id").as("msgid"), TextOps.cleanMsg(col("text")).as("msg"))
+        val cleaned = cleanedDocs(s, d)
         Inference.classify(cleaned, "msg",
             Inference.ModelSpec(1L, "pathologyBERT", "1", "models/pathologyBERT"))
           .withColumn("predicted_label_id",
@@ -144,8 +142,7 @@ object DxQueries {
       "J1 — prediction × 16-row label dimension as an explicit broadcast " +
         "hash join (zero shuffle), then a count per label.",
       (s, d) => {
-        val cleaned = Tables.documents(s, d)
-          .select(col("doc_id").as("msgid"), TextOps.cleanMsg(col("text")).as("msg"))
+        val cleaned = cleanedDocs(s, d)
         val preds = Inference.classify(cleaned, "msg",
             Inference.ModelSpec(1L, "pathologyBERT", "1", "models/pathologyBERT"))
           .withColumn("predicted_label_id",
@@ -220,5 +217,26 @@ object DxQueries {
              |  CASE WHEN diagnosis<>'' THEN 1.0::DOUBLE ELSE 0.5::DOUBLE END AS diagnostic_procedure_flag_pred_score,
              |  CASE WHEN clinical_history<>'' THEN '1' ELSE '0' END AS neoadjuvant_therapy_flag,
              |  CASE WHEN clinical_history<>'' THEN 1.0::DOUBLE ELSE 0.5::DOUBLE END AS neoadjuvant_therapy_flag_pred_score
-             |FROM s ORDER BY msg_id""".stripMargin)))
+             |FROM s ORDER BY msg_id""".stripMargin)),
+
+    Q("dx_embed",
+      "Embedding inference as an operator: text → 8-dim vector via the " +
+        "executor-cached, micro-batched mapPartitions seam (stand-in " +
+        "embedder = md5 bytes mapped to [-1,1]; a real one wraps a " +
+        "sentence-transformer). The stage that produces the embedding " +
+        "column the ANN/near-dup suite consumes. Dims exploded to " +
+        "columns for the oracle compare.",
+      (s, d) => {
+        val emb = Inference.embed(
+          Tables.documents(s, d).select(col("doc_id"), col("text")), "text")
+        emb.select(col("doc_id") +:
+            (0 until 8).map(j => col("embedding")(j).as(s"e$j")): _*)
+          .orderBy("doc_id")
+      },
+      Some(("SELECT doc_id" +
+        (0 until 8).map(j =>
+          s",\n  (('0x' || substring(md5(text), ${2 * j + 1}, 2))::INT / 255.0)" +
+            s" * 2 - 1 AS e$j").mkString +
+        "\nFROM documents ORDER BY doc_id")))
+  )
 }

@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.Metrics
-import OracleCompat._
+import graft.ops.{Metrics, RuntimeFilters}
+import graft.plans.AsOfJoin
+import graft.queries.OracleCompat.{davg, dsum}
 
 /** General relational surface (SURVEY.md §2.3-2.5 and the "free from Spark"
   * operators the oracle harness exercises: group-by, joins of every flavor,
@@ -406,5 +407,356 @@ object Relational {
              |  count(*) AS n
              |FROM lineitem
              |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-             |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)))
+             |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)),
+
+    Q("q20_asof_join",
+      "As-of (temporal) join via the custom Catalyst operator " +
+        "(AsOfJoinPlan → AsOfJoinStrategy → AsOfJoinExec): for each " +
+        "purchase event, the latest prior-or-equal view by the same user. " +
+        "Plans as a co-partitioned sort-merge with one O(n+m) forward " +
+        "pass — no pair blow-up. Oracle: DuckDB's native ASOF LEFT JOIN.",
+      (s, d) => {
+        val ev = Tables.events(s, d)
+        val purchases = ev.filter(col("event_type") === "purchase")
+          .select(col("user_id"), col("event_id"),
+            unix_micros(col("ts")).as("p_us"), col("value").as("p_value"))
+        val views = ev.filter(col("event_type") === "view")
+          .select(col("user_id").as("v_user"),
+            unix_micros(col("ts")).as("v_us"), col("value").as("v_value"))
+        AsOfJoin.asof(purchases, views,
+            leftOn = Seq("user_id"), rightOn = Seq("v_user"),
+            leftTimeCol = "p_us", rightTimeCol = "v_us")
+          .select("user_id", "event_id", "p_us", "p_value", "v_us", "v_value")
+          .orderBy("user_id", "p_us", "event_id")
+      },
+      Some("""WITH p AS (SELECT user_id, event_id, epoch_us(ts) AS p_us,
+             |                  value AS p_value
+             |           FROM events WHERE event_type = 'purchase'),
+             |     v AS (SELECT user_id AS v_user, epoch_us(ts) AS v_us,
+             |                  value AS v_value
+             |           FROM events WHERE event_type = 'view')
+             |SELECT p.user_id, p.event_id, p.p_us, p.p_value, v.v_us, v.v_value
+             |FROM p ASOF LEFT JOIN v
+             |  ON p.user_id = v.v_user AND v.v_us <= p.p_us
+             |ORDER BY p.user_id, p.p_us, p.event_id""".stripMargin)),
+
+    Q("q24_range_join",
+      "Pure range join (no equi-key): every view within ±60s of any " +
+        "purchase, across all users. Naive planning is a nested-loop " +
+        "O(n·m); RangeJoin.pointInInterval manufactures a bucket " +
+        "equi-key (2-bucket explode on the interval side) so it plans as " +
+        "an ordinary shuffle join + exact-range refilter.",
+      (s, d) => {
+        val ev = Tables.events(s, d)
+        val p = ev.filter(col("event_type") === "purchase")
+          .select(col("event_id").as("p_event"),
+            unix_micros(col("ts")).as("p_us"))
+          .withColumn("lo", col("p_us") - 60000000L)
+          .withColumn("hi", col("p_us") + 60000000L)
+        val v = ev.filter(col("event_type") === "view")
+          .select(col("event_id").as("v_event"),
+            unix_micros(col("ts")).as("v_us"))
+        graft.ops.RangeJoin.pointInInterval(p, "lo", "hi", v, "v_us",
+            bucketWidth = 120000000L)
+          .select("p_event", "p_us", "v_event", "v_us")
+          .orderBy("p_event", "v_event")
+      },
+      Some("""WITH p AS (SELECT event_id AS p_event, epoch_us(ts) AS p_us
+             |           FROM events WHERE event_type = 'purchase'),
+             |     v AS (SELECT event_id AS v_event, epoch_us(ts) AS v_us
+             |           FROM events WHERE event_type = 'view')
+             |SELECT p_event, p_us, v_event, v_us
+             |FROM p JOIN v ON v.v_us BETWEEN p.p_us - 60000000 AND p.p_us + 60000000
+             |ORDER BY p_event, v_event""".stripMargin)),
+
+    Q("q25_correlated",
+      "Correlated subqueries — the decorrelation surface q15 doesn't " +
+        "touch: a correlated scalar (per-nation decimal-exact average, " +
+        "rewritten by Catalyst into an aggregate + join) and a " +
+        "correlated EXISTS (rewritten to a semi join).",
+      (s, d) => {
+        Tables.customer(s, d).createOrReplaceTempView("customer_v")
+        Tables.orders(s, d).createOrReplaceTempView("orders_v")
+        s.sql("""
+          SELECT c_nationkey, count(*) AS n_above
+          FROM customer_v c
+          WHERE c_acctbal > (SELECT cast(sum(cast(c2.c_acctbal
+                     AS decimal(28,8))) AS double) / count(*)
+                   FROM customer_v c2
+                   WHERE c2.c_nationkey = c.c_nationkey)
+            AND EXISTS (SELECT 1 FROM orders_v o
+                        WHERE o.o_custkey = c.c_custkey)
+          GROUP BY c_nationkey
+          ORDER BY c_nationkey""")
+      },
+      Some("""SELECT c_nationkey, count(*) AS n_above
+             |FROM customer c
+             |WHERE c_acctbal > (SELECT cast(sum(cast(c2.c_acctbal
+             |           AS decimal(28,8))) AS double) / count(*)
+             |         FROM customer c2
+             |         WHERE c2.c_nationkey = c.c_nationkey)
+             |  AND EXISTS (SELECT 1 FROM orders o
+             |              WHERE o.o_custkey = c.c_custkey)
+             |GROUP BY c_nationkey
+             |ORDER BY c_nationkey""".stripMargin)),
+
+    Q("q21_quantile",
+      "Exact grouped percentiles (p25/p50/p90) — Spark's sort-based " +
+        "`percentile` against DuckDB's `quantile_cont` (both linear " +
+        "interpolation at pos = p·(n−1)).",
+      (s, d) => Tables.lineitem(s, d)
+        .groupBy("l_returnflag")
+        .agg(count(lit(1)).as("n"),
+          percentile(col("l_extendedprice"), lit(0.25)).as("p25"),
+          percentile(col("l_extendedprice"), lit(0.5)).as("p50"),
+          percentile(col("l_extendedprice"), lit(0.9)).as("p90"))
+        .orderBy("l_returnflag"),
+      Some("""SELECT l_returnflag, count(*) AS n,
+             |  quantile_cont(l_extendedprice, 0.25) AS p25,
+             |  quantile_cont(l_extendedprice, 0.5) AS p50,
+             |  quantile_cont(l_extendedprice, 0.9) AS p90
+             |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    Q("q22_window_suite",
+      "Window-function depth over orders: lag/lead (customer order " +
+        "history), rank + dense_rank (spend rank per customer), ntile " +
+        "quartiles and cume_dist — one WindowExec pass, all functions " +
+        "sharing the (custkey, date, key) frame.",
+      (s, d) => {
+        import org.apache.spark.sql.expressions.Window
+        val w = Window.partitionBy("o_custkey")
+          .orderBy(col("o_orderdate"), col("o_orderkey"))
+        Tables.orders(s, d)
+          .filter(col("o_custkey") % 10 === 0)
+          .select(col("o_custkey"), col("o_orderkey"),
+            // o_orderdate is TIMESTAMP_NTZ; cast through TIMESTAMP (session
+            // tz is pinned UTC) for unix_micros parity with epoch_us
+            unix_micros(col("o_orderdate").cast("timestamp")).as("od_us"),
+            col("o_totalprice"),
+            lag(col("o_totalprice"), 1).over(w).as("prev_price"),
+            lead(col("o_totalprice"), 1).over(w).as("next_price"),
+            rank().over(w).cast("long").as("rk"),
+            dense_rank().over(w).cast("long").as("drk"),
+            ntile(4).over(w).cast("long").as("quartile"),
+            cume_dist().over(w).as("cd"))
+          .orderBy("o_custkey", "od_us", "o_orderkey")
+      },
+      Some("""SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS od_us,
+             |  o_totalprice,
+             |  lag(o_totalprice, 1) OVER w AS prev_price,
+             |  lead(o_totalprice, 1) OVER w AS next_price,
+             |  rank() OVER w AS rk,
+             |  dense_rank() OVER w AS drk,
+             |  ntile(4) OVER w AS quartile,
+             |  cume_dist() OVER w AS cd
+             |FROM orders
+             |WHERE o_custkey % 10 = 0
+             |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+             |ORDER BY o_custkey, od_us, o_orderkey""".stripMargin)),
+
+    Q("q23_cube",
+      "CUBE over (returnflag, linestatus) with grouping_id — all four " +
+        "grouping-set combinations in one partial-aggregable pass.",
+      (s, d) => Tables.lineitem(s, d)
+        .cube(col("l_returnflag"), col("l_linestatus"))
+        .agg(grouping_id().cast("long").as("gid"),
+          count(lit(1)).as("n"),
+          OracleCompat.dsum(col("l_quantity")).as("sum_qty"))
+        .orderBy(col("gid"), col("l_returnflag").asc_nulls_first,
+          col("l_linestatus").asc_nulls_first)
+        .select("l_returnflag", "l_linestatus", "gid", "n", "sum_qty"),
+      Some("""SELECT l_returnflag, l_linestatus,
+             |  grouping(l_returnflag) * 2 + grouping(l_linestatus) AS gid,
+             |  count(*) AS n,
+             |  cast(sum(cast(l_quantity AS DECIMAL(28,8))) AS DOUBLE) AS sum_qty
+             |FROM lineitem
+             |GROUP BY CUBE (l_returnflag, l_linestatus)
+             |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)),
+
+    Q("q27_range_frame",
+      "RANGE-frame window: per-customer 30-day trailing order total — " +
+        "the frame is bounded by VALUE distance (order date in days), " +
+        "not row count, so bursts of same-day orders aggregate together. " +
+        "The other WindowExec frame shape next to q22's ROWS/default " +
+        "frames.",
+      (s, d) => {
+        import org.apache.spark.sql.expressions.Window
+        val day = (unix_micros(col("o_orderdate").cast("timestamp")) /
+          86400000000L).cast("long")
+        val w = Window.partitionBy("o_custkey").orderBy("order_day")
+          .rangeBetween(-30, Window.currentRow)
+        Tables.orders(s, d)
+          .filter(col("o_custkey") % 20 === 0)
+          .withColumn("order_day", day)
+          .select(col("o_custkey"), col("o_orderkey"), col("order_day"),
+            // .over must attach to the aggregate itself; cast outside
+            sum(col("o_totalprice")
+                .cast(org.apache.spark.sql.types.DecimalType(28, 8)))
+              .over(w).cast("double").as("trailing_30d"),
+            count(lit(1)).over(w).as("n_trailing"))
+          .orderBy("o_custkey", "order_day", "o_orderkey")
+      },
+      Some("""SELECT o_custkey, o_orderkey,
+             |  epoch_us(o_orderdate) // 86400000000 AS order_day,
+             |  cast(sum(cast(o_totalprice AS DECIMAL(28,8)))
+             |    OVER w AS DOUBLE) AS trailing_30d,
+             |  count(*) OVER w AS n_trailing
+             |FROM orders
+             |WHERE o_custkey % 20 = 0
+             |WINDOW w AS (PARTITION BY o_custkey
+             |  ORDER BY epoch_us(o_orderdate) // 86400000000
+             |  RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
+             |ORDER BY o_custkey, order_day, o_orderkey""".stripMargin)),
+
+    Q("q26_multi_distinct",
+      "Several COUNT(DISTINCT) over different columns in one aggregation " +
+        "— Catalyst plans this through Expand (rows replicated per " +
+        "distinct set, then one partial-aggregable pass) instead of N " +
+        "self-joined subqueries.",
+      (s, d) => Tables.orders(s, d)
+        .groupBy("o_orderstatus")
+        .agg(countDistinct(col("o_custkey")).as("n_cust"),
+          countDistinct(col("o_orderpriority")).as("n_prio"),
+          count(lit(1)).as("n"))
+        .orderBy("o_orderstatus"),
+      Some("""SELECT o_orderstatus,
+             |  count(DISTINCT o_custkey) AS n_cust,
+             |  count(DISTINCT o_orderpriority) AS n_prio,
+             |  count(*) AS n
+             |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    Q("q28_grouping_sets",
+      "Explicit GROUPING SETS — the arbitrary-subset member of the " +
+        "cube/rollup family (q23/q13 cover the full lattice and the " +
+        "prefix chain; real reports ask for a hand-picked set): " +
+        "(returnflag, linestatus), (returnflag), (suppkey mod 10), () " +
+        "— all four sets in ONE partial-aggregable Expand pass, " +
+        "distinguished by grouping_id.",
+      (s, d) => Tables.lineitem(s, d)
+        .withColumn("supp_bucket", col("l_suppkey") % 10)
+        .groupingSets(
+          Seq(Seq(col("l_returnflag"), col("l_linestatus")),
+            Seq(col("l_returnflag")), Seq(col("supp_bucket")), Seq()),
+          col("l_returnflag"), col("l_linestatus"), col("supp_bucket"))
+        .agg(grouping_id().cast("long").as("gid"),
+          count(lit(1)).as("n"),
+          OracleCompat.dsum(col("l_quantity")).as("sum_qty"))
+        .orderBy(col("gid"), col("l_returnflag").asc_nulls_first,
+          col("l_linestatus").asc_nulls_first,
+          col("supp_bucket").asc_nulls_first)
+        .select("l_returnflag", "l_linestatus", "supp_bucket", "gid",
+          "n", "sum_qty"),
+      Some("""WITH li AS (
+             |  SELECT *, l_suppkey % 10 AS supp_bucket FROM lineitem)
+             |SELECT l_returnflag, l_linestatus, supp_bucket,
+             |  grouping(l_returnflag) * 4 + grouping(l_linestatus) * 2 +
+             |    grouping(supp_bucket) AS gid,
+             |  count(*) AS n,
+             |  cast(sum(cast(l_quantity AS DECIMAL(28,8))) AS DOUBLE)
+             |    AS sum_qty
+             |FROM li
+             |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+             |  (l_returnflag), (supp_bucket), ())
+             |ORDER BY gid, l_returnflag NULLS FIRST,
+             |  l_linestatus NULLS FIRST, supp_bucket NULLS FIRST""".stripMargin)),
+
+    Q("q29_bloom_join",
+      "Explicit runtime-filter join reduction " +
+        "(RuntimeFilters.bloomReducedJoin): a bloom filter built over " +
+        "the filtered dim side's keys (distributed partial aggregation " +
+        "— only the fixed-size filter reaches the driver) prunes the " +
+        "fact side AT THE SCAN with a native codegen'd " +
+        "BloomFilterMightContain before the exchange, so only " +
+        "~(match_rate + fpp) of lineitem pays the shuffle; the exact " +
+        "join then clears the false positives, making the result " +
+        "EXACTLY the plain inner join — which is the oracle. The " +
+        "explicit form of the optimizer's own runtime bloom filters, " +
+        "for when the author knows the reduction pays (dim too big to " +
+        "broadcast, key set a few MB of filter).",
+      (s, d) => RuntimeFilters.bloomReducedJoin(
+          Tables.lineitem(s, d)
+            .select("l_orderkey", "l_quantity", "l_returnflag"),
+          Tables.orders(s, d).filter(col("o_orderstatus") === "P")
+            .select("o_orderkey"),
+          "l_orderkey", "o_orderkey",
+          expectedItems = 100000L, fpp = 0.01)
+        .groupBy(col("l_returnflag"))
+        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
+        .orderBy("l_returnflag"),
+      Some("""SELECT l_returnflag, count(*) AS n,
+             |  cast(sum(cast(l_quantity AS DECIMAL(28,8))) AS DOUBLE)
+             |    AS sum_qty
+             |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+             |WHERE o_orderstatus = 'P'
+             |GROUP BY 1
+             |ORDER BY l_returnflag""".stripMargin)),
+
+    Q("q30_unpivot",
+      "Relational melt: four lineitem measures unpivot to long format " +
+        "in ONE scan (Spark plans Expand — each row emits 4 tuples " +
+        "map-side; the UNION-ALL restatement the oracle runs would " +
+        "scan four times), then a per-metric exact-decimal rollup.",
+      (s, d) => Tables.lineitem(s, d)
+        .unpivot(
+          Array(col("l_orderkey"), col("l_linenumber")),
+          Array(col("l_quantity"), col("l_extendedprice"),
+            col("l_discount"), col("l_tax")),
+          "metric", "val")
+        .groupBy(col("metric"))
+        .agg(count(col("val")).as("n"), OracleCompat.dsum(col("val"))
+          .as("total"))
+        .orderBy(col("metric")),
+      Some("""WITH m AS (
+             |  SELECT 'l_quantity' AS metric, l_quantity AS val
+             |  FROM lineitem
+             |  UNION ALL SELECT 'l_extendedprice', l_extendedprice
+             |  FROM lineitem
+             |  UNION ALL SELECT 'l_discount', l_discount FROM lineitem
+             |  UNION ALL SELECT 'l_tax', l_tax FROM lineitem)
+             |SELECT metric, count(val) AS n,
+             |  CAST(sum(CAST(val AS DECIMAL(28,8))) AS DOUBLE) AS total
+             |FROM m GROUP BY metric ORDER BY metric""".stripMargin)),
+
+    Q("q31_asof_tolerance",
+      "As-of join with a MAX-STALENESS tolerance (pandas merge_asof " +
+        "tolerance / kdb wj): each purchase joins its latest prior " +
+        "view by the same user ONLY if that view is at most 6 hours " +
+        "old - staler state comes back NULL instead of leaking into " +
+        "the feature row. Because the as-of match is already the " +
+        "latest row <= t, tolerance is one projection over the custom " +
+        "AsOfJoinExec's exact result - never a second join. Oracle: " +
+        "DuckDB's native ASOF LEFT JOIN with the same nulling CASE.",
+      (s, d) => {
+        val ev = Tables.events(s, d)
+        val purchases = ev.filter(col("event_type") === "purchase")
+          .select(col("user_id"), col("event_id"),
+            unix_micros(col("ts")).as("p_us"), col("value").as("p_value"))
+        val views = ev.filter(col("event_type") === "view")
+          .select(col("user_id").as("v_user"),
+            unix_micros(col("ts")).as("v_us"), col("value").as("v_value"))
+        AsOfJoin.asofTolerance(purchases, views,
+            leftOn = Seq("user_id"), rightOn = Seq("v_user"),
+            leftTimeCol = "p_us", rightTimeCol = "v_us",
+            tolerance = 6L * 3600L * 1000000L)
+          .select("user_id", "event_id", "p_us", "p_value", "v_us",
+            "v_value")
+          .orderBy("user_id", "p_us", "event_id")
+      },
+      Some("""WITH p AS (SELECT user_id, event_id, epoch_us(ts) AS p_us,
+             |                  value AS p_value
+             |           FROM events WHERE event_type = 'purchase'),
+             |     v AS (SELECT user_id AS v_user, epoch_us(ts) AS v_us,
+             |                  value AS v_value
+             |           FROM events WHERE event_type = 'view')
+             |SELECT p.user_id, p.event_id, p.p_us, p.p_value,
+             |  CASE WHEN v.v_us IS NOT NULL
+             |        AND p.p_us - v.v_us <= 21600000000
+             |       THEN v.v_us END AS v_us,
+             |  CASE WHEN v.v_us IS NOT NULL
+             |        AND p.p_us - v.v_us <= 21600000000
+             |       THEN v.v_value END AS v_value
+             |FROM p ASOF LEFT JOIN v
+             |  ON p.user_id = v.v_user AND v.v_us <= p.p_us
+             |ORDER BY p.user_id, p.p_us, p.event_id""".stripMargin))
+  )
 }

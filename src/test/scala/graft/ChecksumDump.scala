@@ -35,9 +35,7 @@ object ChecksumDump {
     val outFile = args(1)
     val spark = graft.core.GraftSession.forHarness("graft-checksum")
     val nameArgs = applyConfArgs(spark, args.drop(2).toSeq)
-    val names =
-      if (nameArgs.nonEmpty) nameArgs
-      else SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.select(Some(nameArgs).filter(_.nonEmpty))
     val out = new java.io.PrintWriter(outFile)
     names.foreach { name =>
       val t0 = System.nanoTime()

@@ -12,7 +12,8 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val spark = graft.core.GraftSession.forHarness("graft-profile")
-    val names = ChecksumDump.applyConfArgs(spark, args.tail.toSeq)
+    val names =
+      SparkEntry.select(Some(ChecksumDump.applyConfArgs(spark, args.tail.toSeq)))
 
     @volatile var jobs = 0
     @volatile var stages = 0

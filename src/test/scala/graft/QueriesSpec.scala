@@ -11,6 +11,15 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
   }
 
+  test("registry query names are distinct") {
+    // queries and oracleSql are built with toMap, which silently keeps
+    // the last of two equal names
+    val dups = SparkEntry.registry.groupBy(_.name).collect {
+      case (n, qs) if qs.size > 1 => n
+    }
+    assert(dups.isEmpty, dups.toSeq.sorted.mkString(", "))
+  }
+
   test("entry (flagship) returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
