@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
-import graft.core.{GraftSession, Watchdog}
+import graft.core.{GraftSession, QueryMetrics, Watchdog}
 
 /** Benchmark main. Harness-survival + honest-measurement design (the
   * round-9/10 lessons):
@@ -31,6 +31,10 @@ import graft.core.{GraftSession, Watchdog}
   *     ANSI mode throws ARITHMETIC_OVERFLOW for any result bigger than a
   *     handful of rows: 243/306 queries were reported failed by the
   *     HARNESS's own measuring action.
+  *   - PER-QUERY RECORD: [[graft.core.QueryMetrics]] accounts each run's
+  *     jobs, stages and tasks by its Watchdog job group, construction
+  *     jobs split out; the persisted record carries the best pass's
+  *     under `metrics` (bench_results/README.md). Stdout is unchanged.
   */
 object Bench {
   // generous vs the worst steady-state query at sf0.1 (~23 s pre-codegen)
@@ -126,6 +130,8 @@ object Bench {
     // timed pass doesn't inherit GC pressure from warmup
     spark.catalog.clearCache()
     System.gc()
+    // registered after the warm-up: only the timed passes are recorded
+    val metrics = QueryMetrics.register(sc)
 
     // two timed passes (was three: trimmed to fit the 3600 s stage budget
     // at 300+ queries). Per query we report the BEST pass (steady-state
@@ -146,6 +152,8 @@ object Bench {
     val budgetCutoff = 0.40
     // passTimes(pass)(name) = seconds, -1 on failure/timeout
     val passTimes = Array.fill(nPasses)(collection.mutable.LinkedHashMap.empty[String, Double])
+    // bestMetrics(name) = the execution record of the query's best pass
+    val bestMetrics = collection.mutable.Map.empty[String, QueryMetrics.Record]
     def emit(partial: Boolean): Unit = {
       val done = names.filter(n => passTimes.exists(_.contains(n)))
       val best = done.map { n =>
@@ -200,6 +208,9 @@ object Bench {
             .mkString("{", ",", "}")
         val passMaps = passTimes.filter(_.nonEmpty).map(qmap(_))
           .mkString("[", ",", "]")
+        val metricsMap = best.collect { case (n, v) if v >= 0 =>
+          "\"" + n + "\":" + bestMetrics(n).json
+        }.mkString("{", ",", "}")
         val body =
           f"""{"sf":"$sfDir","cpus":"$cpus","passes":$nPasses,""" +
           s""""subset":${only.isDefined},""" +
@@ -207,7 +218,7 @@ object Bench {
           f""""canary_before_s":$canaryBefore%.3f,"canary_after_s":$canaryAfter%.3f,""" +
           s""""n_failed":${failed.size},"n_done":${done.size},""" +
           s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-          s""""best":${qmap(best)},"pass_times":$passMaps}"""
+          s""""best":${qmap(best)},"pass_times":$passMaps,"metrics":$metricsMap}"""
         // auxiliary persistence, never the run's verdict: an unwritable
         // path must not crash the main after a full successful bench —
         // the compact stdout line above is the actual driver contract
@@ -227,7 +238,9 @@ object Bench {
         if (timedOut(name)) passTimes(p)(name) = -1.0
         else {
           val t0 = System.nanoTime()
-          val err = Watchdog.run(sc, name, QueryTimeoutS) { touchAll(fn(spark, sfDir)) }
+          val err = Watchdog.run(sc, name, QueryTimeoutS) {
+            touchAll(metrics.building(fn(spark, sfDir)))
+          }
           val dt = err match {
             case None => (System.nanoTime() - t0) / 1e9
             case Some(reason) =>
@@ -236,6 +249,9 @@ object Bench {
               -1.0
           }
           graft.core.Caches.releaseAll() // outside the timed span: harness cost
+          val m = metrics.take(name)
+          if (dt >= 0 && passTimes.flatMap(_.get(name)).forall(t => t < 0 || dt < t))
+            bestMetrics(name) = m
           passTimes(p)(name) = dt
           emit(partial = true)
         }

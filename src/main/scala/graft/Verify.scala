@@ -1,5 +1,5 @@
 package graft
-import graft.core.{GraftSession, Watchdog}
+import graft.core.{GraftSession, QueryMetrics, Watchdog}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -21,7 +21,8 @@ import java.nio.file.{Files, Paths}
   *      one pathological query can't consume the stage budget for
   *      everything behind it.
   *   5. `manifest.json` is rewritten after EVERY query (name → status,
-  *      wall seconds, bytes written), so if a later driver-side step
+  *      wall seconds, bytes written, driver-fetch bytes and the
+  *      [[graft.core.QueryMetrics]] record), so if a later driver-side step
   *      zeroes the round the next judge can tell "verify never ran"
   *      from "compare step failed" — rounds 9 and 10 both produced an
   *      empty CORRECTNESS file from a healthy engine with no way to
@@ -90,21 +91,10 @@ object Verify {
     val spark = GraftSession.forHarness("graft-verify")
     new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      // non-ASCII also escapes (not just control chars): pure-ASCII
-      // JSON survives any reader/writer charset — a decomposed Unicode
-      // literal in an oracle (ta_nfc) must reach DuckDB intact
-      case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // pure-ASCII JSON strings: a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness
+    def q(s: String): String = QueryMetrics.jsonString(s)
     // oracle side FIRST: it is cheap and a late kill must not lose it.
     // Always the FULL map, even under a dev query filter — the filter
     // trims the expensive parquet side only, so a filtered run can
@@ -133,45 +123,9 @@ object Verify {
         Paths.get(s"$outDir/manifest.json"), body)
     }
 
-    // driver-fetch meter, attributed by JOB GROUP (Watchdog tags every
-    // query's jobs "name#seq"), not by wall-clock window: a timed-out
-    // query's straggler tasks can post TaskEnd events AFTER the next
-    // query starts, and a reset-and-accumulate counter would charge
-    // those bytes to the innocent neighbor — which this gate would then
-    // falsely fail. TaskEnd carries no group, so onJobStart records
-    // stageId → group and tasks are attributed through their stage.
-    val stageGroup =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val groupFetch = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.AtomicLong]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val g = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-            .getOrElse("")
-          e.stageInfos.foreach(si => stageGroup.put(si.stageId, g))
-        }
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            groupFetch.computeIfAbsent(
-                stageGroup.getOrDefault(e.stageId, ""),
-                _ => new java.util.concurrent.atomic.AtomicLong())
-              .addAndGet(m.resultSize)
-            ()
-          }
-        }
-      })
-    def fetchedFor(name: String): Long = {
-      var sum = 0L
-      groupFetch.forEach { (g, v) =>
-        if (g.startsWith(name + "#")) sum += v.get()
-      }
-      sum
-    }
+    // per-query record, attributed by job group: result bytes are the
+    // driver-fetch bytes the bounded-collect cap gates on
+    val metrics = QueryMetrics.register(spark.sparkContext)
 
     val costs = measuredCosts
     val ordered = SparkEntry.queries.toSeq
@@ -180,21 +134,21 @@ object Verify {
       if (keep(name)) {
         val t0 = System.nanoTime()
         val err = Watchdog.run(spark.sparkContext, name, QueryTimeoutS) {
-          fn(spark, sfDir).repartition(1).write.mode("overwrite")
+          metrics.building(fn(spark, sfDir)).repartition(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         }
         val wallS = (System.nanoTime() - t0) / 1e9
-        val drained =
-          org.apache.spark.sql.graft.Shims.drainListenerBus(spark.sparkContext)
+        val m = metrics.take(name)
         // an undrained bus means the fetch figure may UNDERCOUNT — the
         // cap can still fire (a partial sum over the cap is over the
         // cap), but a pass is weaker evidence, so mark the manifest
         // entry instead of letting it silently read as a clean pass
-        if (!drained) System.err.println(
+        if (m.partial) System.err.println(
           s"[verify] WARN listener bus did not drain within 30s for " +
             s"$name — driver_fetch_bytes may undercount")
-        val fetchNote = if (drained) "" else ""","fetch_partial":true"""
-        val fetched = fetchedFor(name)
+        val fetchNote = if (m.partial) ""","fetch_partial":true""" else ""
+        val fetched = m.resultBytes
+        val metricsNote = s""","metrics":${m.json}"""
         err match {
           case None if fetched > DriverFetchCapBytes =>
             // the structural bounded-collect gate: forfeit the result so
@@ -204,17 +158,17 @@ object Verify {
               s"$DriverFetchCapBytes-byte bounded-collect cap"
             System.err.println(s"[verify] $name FAILED: $why")
             manifest(name) =
-              f"""{"status":${q(why)},"wall_s":$wallS%.2f,"bytes":0,"driver_fetch_bytes":$fetched$fetchNote}"""
+              f"""{"status":${q(why)},"wall_s":$wallS%.2f,"bytes":0,"driver_fetch_bytes":$fetched$fetchNote$metricsNote}"""
           case None =>
             System.err.println(
               f"[verify] $name ok $wallS%.2fs fetch=${fetched}B" +
-                (if (drained) "" else " (partial)"))
+                (if (m.partial) " (partial)" else ""))
             manifest(name) =
-              f"""{"status":"ok","wall_s":$wallS%.2f,"bytes":${dirBytes(s"$outDir/$name")},"driver_fetch_bytes":$fetched$fetchNote}"""
+              f"""{"status":"ok","wall_s":$wallS%.2f,"bytes":${dirBytes(s"$outDir/$name")},"driver_fetch_bytes":$fetched$fetchNote$metricsNote}"""
           case Some(reason) =>
             System.err.println(s"[verify] $name FAILED: $reason")
             manifest(name) =
-              f"""{"status":${q(reason)},"wall_s":$wallS%.2f,"bytes":0}"""
+              f"""{"status":${q(reason)},"wall_s":$wallS%.2f,"bytes":0$metricsNote}"""
         }
         graft.core.Caches.releaseAll()
         writeManifest()

@@ -23,14 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Session conf key FORCING multi-stage pipeline barriers to reliable
-    * `checkpoint` (replicated/checkpoint-dir storage, survives executor
-    * loss) regardless of size. Unset/false = size-adaptive mode (see
-    * [[BarrierReliableBytesKey]]).
-    */
-  val ReliableBarriersKey = "graft.pipeline.reliableBarriers"
-
-  /** Session conf key: in size-adaptive mode, a barrier whose MEASURED
+  /** Session conf key: a barrier whose MEASURED
     * materialized size (actual block-manager bytes of the eager
     * localCheckpoint, memory + disk) reaches this many bytes is
     * PROMOTED to a reliable checkpoint. Default 64 GiB: the r14
@@ -39,7 +32,8 @@ object Curation {
     * with the corpus (~2 TB at 1B docs) — so on a real 100 TB run the
     * one corpus-scale barrier auto-flips to the replicated write
     * (whose cost it dwarfs with its recompute cascade), and bench/
-    * interactive runs never pay a replicated write.
+    * interactive runs never pay a replicated write. 0 promotes every
+    * barrier (the conservative setting for multi-hour runs).
     */
   val BarrierReliableBytesKey = "graft.pipeline.barrierReliableBytes"
 
@@ -52,66 +46,54 @@ object Curation {
     * measured 15s of pure driver re-planning vs <1s execution at
     * sf0.01 for the nine-stage chain.
     *
-    * Mode selection:
-    *  - [[ReliableBarriersKey]] = true forces `Dataset.checkpoint` to
-    *    the Spark checkpoint directory (set lazily if absent) for EVERY
-    *    barrier — the conservative override for multi-hour runs.
-    *  - otherwise SIZE-ADAPTIVE (the r14 probe's decision rule, made
-    *    automatic): the barrier first materializes as an eager
-    *    `localCheckpoint` (executor-local blocks — no replicated
-    *    write), its ACTUAL bytes are read from the block manager, and
-    *    iff they reach [[BarrierReliableBytesKey]] the already-
-    *    materialized blocks are re-written as a reliable checkpoint
-    *    (one O(barrier) local read + replicated write — no recompute
-    *    of the upstream chain) and the local copy is released. Small
-    *    barriers — all of them at bench scale — never pay a
-    *    replicated write; a corpus-scale barrier on a long run does,
-    *    because there a single executor-loss recompute cascade costs
-    *    more than the write. Same rows, same plan downstream, same
-    *    oracle on every path (spec-pinned).
+    * SIZE-ADAPTIVE (the r14 probe's decision rule, made automatic):
+    * the barrier first materializes as an eager `localCheckpoint`
+    * (executor-local blocks — no replicated write), its ACTUAL bytes
+    * are read from the block manager, and iff they reach
+    * [[BarrierReliableBytesKey]] the already-materialized blocks are
+    * re-written as a reliable checkpoint to the Spark checkpoint
+    * directory (set lazily if absent; one O(barrier) local read +
+    * replicated write — no recompute of the upstream chain) and the
+    * local copy is released. Small barriers — all of them at bench
+    * scale — never pay a replicated write; a corpus-scale barrier on
+    * a long run does, because there a single executor-loss recompute
+    * cascade costs more than the write. Same rows, same plan
+    * downstream, same oracle on every path (spec-pinned).
     */
   def stageBarrier(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    def reliable(d: DataFrame): DataFrame = {
+    val threshold = graft.core.Config.confLong(spark,
+      BarrierReliableBytesKey, DefaultBarrierReliableBytes)
+    // the barrier's persisted RDD is read DIRECTLY off the
+    // checkpointed Dataset's plan (its LogicalRDD leaf), so the
+    // measurement — and, on promote, the release — targets exactly
+    // this barrier. An id-diff of getPersistentRDDs around the call
+    // would mis-attribute anything another thread persists
+    // concurrently (and unpersist a foreign live cache on promote).
+    val local = df.localCheckpoint()
+    val newIds = org.apache.spark.sql.graft.Shims
+      .logicalRddIds(local).toSet
+    // getRDDStorageInfo reads the async status store: drain the
+    // listener bus first or the just-written blocks may not be
+    // visible yet (an under-read could only skip a deserved
+    // promotion, never corrupt data — but measure properly). A
+    // failed drain is best-effort by contract.
+    org.apache.spark.sql.graft.Shims.drainListenerBus(sc)
+    val bytes = sc.getRDDStorageInfo
+      .filter(i => newIds.contains(i.id))
+      .map(i => i.memSize + i.diskSize).sum
+    if (bytes < threshold) local
+    else {
       if (sc.getCheckpointDir.isEmpty)
         sc.setCheckpointDir(
           sys.props.getOrElse("java.io.tmpdir", "/tmp") +
             "/graft_checkpoints")
-      d.checkpoint()
-    }
-    val forced = spark.conf.getOption(ReliableBarriersKey)
-      .exists(_.trim.equalsIgnoreCase("true"))
-    if (forced) reliable(df)
-    else {
-      val threshold = graft.core.Config.confLong(spark,
-        BarrierReliableBytesKey, DefaultBarrierReliableBytes)
-      // the barrier's persisted RDD is read DIRECTLY off the
-      // checkpointed Dataset's plan (its LogicalRDD leaf), so the
-      // measurement — and, on promote, the release — targets exactly
-      // this barrier. An id-diff of getPersistentRDDs around the call
-      // would mis-attribute anything another thread persists
-      // concurrently (and unpersist a foreign live cache on promote).
-      val local = df.localCheckpoint()
-      val newIds = org.apache.spark.sql.graft.Shims
-        .logicalRddIds(local).toSet
-      // getRDDStorageInfo reads the async status store: drain the
-      // listener bus first or the just-written blocks may not be
-      // visible yet (an under-read could only skip a deserved
-      // promotion, never corrupt data — but measure properly). A
-      // failed drain is best-effort by contract.
-      org.apache.spark.sql.graft.Shims.drainListenerBus(sc)
-      val bytes = sc.getRDDStorageInfo
-        .filter(i => newIds.contains(i.id))
-        .map(i => i.memSize + i.diskSize).sum
-      if (bytes < threshold) local
-      else {
-        val promoted = reliable(local)
-        sc.getPersistentRDDs.collect {
-          case (id, rdd) if newIds.contains(id) => rdd
-        }.foreach(_.unpersist(blocking = false))
-        promoted
-      }
+      val promoted = local.checkpoint()
+      sc.getPersistentRDDs.collect {
+        case (id, rdd) if newIds.contains(id) => rdd
+      }.foreach(_.unpersist(blocking = false))
+      promoted
     }
   }
 

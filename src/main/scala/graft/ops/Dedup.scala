@@ -919,13 +919,10 @@ object Dedup {
     * default) — beyond ~7M history keys at 1% that degrades the
     * effective fpp toward 1 and the "prefilter" flags everything,
     * exactly where it was supposed to pay off. The ceilings are raised
-    * to the requested size around the eager build only and restored in
-    * finally: they exist to bound the OPTIMIZER's own injected runtime
-    * filters, and leaking a widened ceiling session-wide would let an
-    * unrelated later join build a multi-GB filter. The widen-build-
-    * restore window is serialized through a JVM lock so two concurrent
-    * builds on one session cannot restore each other's ceilings
-    * mid-build (which would silently re-cap the larger request).
+    * to the requested size on a cloned session that runs the eager
+    * build only: they exist to bound the OPTIMIZER's own injected
+    * runtime filters, and a widened ceiling in the shared session conf
+    * would let an unrelated later join build a multi-GB filter.
     */
   private[ops] def buildHistoryBloom(history: DataFrame, keyCol: String,
                                      expectedItems: Long,
@@ -934,26 +931,17 @@ object Dedup {
     // optimal bit count for the target fpp: -n·ln(p) / (ln 2)²
     val numBits = math.max(64L, math.ceil(
       -expectedItems.toDouble * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    val spark = history.sparkSession
-    val ceilings = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> numBits,
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> expectedItems)
-    bloomBuildLock.synchronized {
-      val saved = ceilings.map { case (k, _) => k -> spark.conf.get(k) }
-      try {
-        ceilings.foreach { case (k, needed) =>
-          if (spark.conf.get(k).toLong < needed)
-            spark.conf.set(k, needed.toString)
-        }
-        history
-          .select(Shims.bloomFilterAgg(xxhash64(col(keyCol)), expectedItems,
-            numBits).as("bf"))
-          .head().getAs[Array[Byte]]("bf") // eager job, inside the window
-      } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-    }
+    val clone = Shims.cloneSession(history.sparkSession)
+    Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> numBits,
+        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> expectedItems)
+      .foreach { case (k, needed) =>
+        if (clone.conf.get(k).toLong < needed) clone.conf.set(k, needed.toString)
+      }
+    Shims.ofRows(clone, history.queryExecution.analyzed)
+      .select(Shims.bloomFilterAgg(xxhash64(col(keyCol)), expectedItems,
+        numBits).as("bf"))
+      .head().getAs[Array[Byte]]("bf")
   }
-
-  private val bloomBuildLock = new Object
 
   /** Connected components over an undirected candidate-pair edge list —
     * the dedup endgame: near-dup PAIRS (minhash/simhash/jaccard output)

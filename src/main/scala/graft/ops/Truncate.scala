@@ -26,8 +26,6 @@ import graft.functions.WsTokens
   */
 object Truncate {
 
-  val ReferenceBudget = 510 // max_length 512 minus [CLS]/[SEP], dx_group.py:49-61
-
   /** Whitespace tokens of `trim(text)`: 0 when blank, NULL for NULL. */
   def tokenCount(text: Column): Column = WsTokens.count(text)
 

@@ -4,8 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.{Dedup, Similarity, TextAnalysis, TextOps, UrlOps}
-import graft.queries.OracleCompat.{KmeansDims, KmeansIters, KmeansK, dotSql, kmeansCtes,
-  kmeansCtesOn, minhashPairCtes, qualitySql, urlCtes, wordShingleSql}
+import graft.queries.OracleCompat.{KmeansDims, KmeansIters, KmeansK, cleanSql, dotSql,
+  kmeansCtes, kmeansCtesOn, minhashPairCtes, qualitySql, urlCtes, wordShingleSql}
 import graft.queries.QueryFixtures.{scratch, syntheticUrl}
 
 /** Deduplication (`dedup_*`): exact and fuzzy duplicates over documents
@@ -261,10 +261,8 @@ object DedupQueries {
       },
       // history = doc_id % 3 = 0 side; incoming = the rest (matching the
       // Spark arguments above: incoming first, history second)
-      Some("""WITH f AS (
-             |  SELECT doc_id,
-             |    md5(trim(regexp_replace(regexp_replace(lower(text),
-             |      '[\x00-\x1f]+', ' ', 'g'), '\s+', ' ', 'g'))) AS fp
+      Some(s"""WITH f AS (
+             |  SELECT doc_id, md5($cleanSql) AS fp
              |  FROM documents)
              |SELECT i.doc_id, i.fp
              |FROM f i

@@ -421,7 +421,7 @@ object DocQueries {
         "caching leaves the whole logical tree for AQE to re-optimize " +
         "at every exchange — measured 15s of driver re-planning vs " +
         "<1s execution at sf0.01; localCheckpoint by default, reliable " +
-        "checkpoint-to-dir via the graft.pipeline.reliableBarriers conf " +
+        "checkpoint-to-dir at/above graft.pipeline.barrierReliableBytes " +
         "for long runs; no orchestrator): " +
         "quality gate (>= 0.5 on raw text) → cross-doc SUBSTRING dedup " +
         "(k-gram spans, first occurrence survives) → MinHash-LSH " +
@@ -448,8 +448,9 @@ object DocQueries {
         // so each stage plans against a scan of the (post-filter, small
         // relative to the corpus) previous barrier. Same data, same
         // oracle. Default is localCheckpoint (executor-loss recompute,
-        // as in the CC loops); setting Curation.ReliableBarriersKey
-        // swaps in reliable checkpoint-to-dir for long runs where a
+        // as in the CC loops); a barrier at/above
+        // Curation.BarrierReliableBytesKey (0 = every barrier) is
+        // promoted to reliable checkpoint-to-dir for long runs where a
         // recompute cascade costs more than the replicated write
         // (PipelinesSpec pins reliable ≡ local row-for-row).
         // 1. quality gate on the raw text

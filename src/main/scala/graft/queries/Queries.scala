@@ -44,9 +44,6 @@ object OracleCompat {
   def md5Label(c: Column, numLabels: Int = 16): Column =
     conv(substring(md5(c), 1, 1), 16, 10).cast("long") % numLabels
 
-  def md5Score(c: Column): Column =
-    conv(substring(md5(c), 2, 1), 16, 10).cast("long") / lit(15.0)
-
   /** DuckDB restatement of Dedup.wordShingles. */
   private[queries] def wordShingleSql(c: String, n: Int): String = {
     val w = s"string_split_regex(trim($c), '\\s+')"

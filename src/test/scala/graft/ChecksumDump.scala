@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{bit_xor, col, struct, sum, xxhash64}
 
 /** Optimization-round A/B harness: dump, for EVERY declared query (or a
@@ -17,24 +16,18 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, sum, xxhash64}
   *        [conf:k=v ...] [query ...]"
   */
 object ChecksumDump {
-  /** Set every `conf:k=v` argument on the session; returns the others. */
-  private[graft] def applyConfArgs(spark: SparkSession,
-                                   args: Seq[String]): Seq[String] = {
-    val (confArgs, rest) = args.partition(_.startsWith("conf:"))
-    confArgs.foreach { a =>
-      val kv = a.stripPrefix("conf:").split("=", 2)
-      spark.conf.set(kv(0), kv(1))
-    }
-    rest
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ChecksumDump <sfDir> <outFile> " +
       "[conf:k=v ...] [query ...]")
     val sfDir = args(0)
     val outFile = args(1)
     val spark = graft.core.GraftSession.forHarness("graft-checksum")
-    val nameArgs = applyConfArgs(spark, args.drop(2).toSeq)
+    // every `conf:k=v` argument is set on the session; the rest are names
+    val (confArgs, nameArgs) = args.drop(2).toSeq.partition(_.startsWith("conf:"))
+    confArgs.foreach { a =>
+      val kv = a.stripPrefix("conf:").split("=", 2)
+      spark.conf.set(kv(0), kv(1))
+    }
     val names = SparkEntry.select(Some(nameArgs).filter(_.nonEmpty))
     val out = new java.io.PrintWriter(outFile)
     names.foreach { name =>

@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.SparkSpec
-import graft.core.{BatchLedger, Tables}
+import graft.core.{BatchLedger, QueryMetrics, Tables, Watchdog}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -28,7 +28,8 @@ class PipelinesSpec extends SparkSpec {
     def run() = graft.SparkEntry.queries("pretrain_pipeline")(
       spark, graft.SparkSpec.Sf0001).collect().map(_.toSeq).toSeq
     val local = run()
-    spark.conf.set(Curation.ReliableBarriersKey, "true")
+    // a zero-byte threshold promotes every barrier to a reliable checkpoint
+    spark.conf.set(Curation.BarrierReliableBytesKey, "0")
     try {
       val reliable = run()
       assert(reliable == local,
@@ -36,7 +37,7 @@ class PipelinesSpec extends SparkSpec {
       // the reliable path actually wrote through the checkpoint dir
       assert(spark.sparkContext.getCheckpointDir.isDefined,
         "reliable barriers must have set a checkpoint dir")
-    } finally spark.conf.unset(Curation.ReliableBarriersKey)
+    } finally spark.conf.unset(Curation.BarrierReliableBytesKey)
   }
 
   test("stageBarrier size-adaptive mode: a sub-threshold barrier stays " +
@@ -115,30 +116,21 @@ class PipelinesSpec extends SparkSpec {
 
   test("BatchLedger allocates and builds its history without a Spark job") {
     val sc = spark.sparkContext
-    val group = "ledger-no-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "ledger")
+    val metrics = QueryMetrics.register(sc)
     try {
-      val ledger = new BatchLedger(spark, ledgerDir("graft_ledger_j"))
-      (1 to 3).foreach(i => ledger.newBatch("p", "20220101", "20230101", s"c$i"))
-      val history = ledger.history
-      org.apache.spark.sql.graft.Shims.drainListenerBus(sc)
-      assert(jobs.get == 0, s"${jobs.get} Spark jobs in newBatch/history")
+      var history: org.apache.spark.sql.DataFrame = null
+      val err = Watchdog.run(sc, "ledger-no-jobs", timeoutS = 60) {
+        val ledger = new BatchLedger(spark, ledgerDir("graft_ledger_j"))
+        (1 to 3).foreach(i => ledger.newBatch("p", "20220101", "20230101", s"c$i"))
+        history = ledger.history
+      }
+      assert(err.isEmpty, err)
+      val jobs = metrics.take("ledger-no-jobs").jobs
+      assert(jobs == 0, s"$jobs Spark jobs in newBatch/history")
       assert(history.schema == StructType(StructField("batch_id", LongType) +:
         Seq("pipeline_name", "date_from", "date_to", "comment")
           .map(StructField(_, StringType))))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    } finally sc.removeSparkListener(metrics)
   }
 
   test("BatchLedger gives 8 concurrent allocators distinct, dense ids") {
