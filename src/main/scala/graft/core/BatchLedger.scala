@@ -40,15 +40,13 @@ final class BatchLedger(spark: SparkSession, ledgerPath: String) {
 
   /** Every allocated id, ascending. */
   private def ids: Seq[Long] = {
-    val names =
-      try fs.listStatus(new Path(ledgerPath)).toSeq.map(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    val found = names.flatMap(IndexCommits.parseMarker(_, Seq(Prefix))).map(_._2)
-    if (found.isEmpty && names.exists(_.startsWith("part-")))
+    val (found, others) =
+      IndexCommits.listMarkers(fs, new Path(ledgerPath), Seq(Prefix))
+    if (found.isEmpty && others.exists(_.startsWith("part-")))
       throw new IllegalStateException(
         s"$ledgerPath holds a parquet batch ledger of the earlier format; " +
           "move it aside or point the ledger at a new path")
-    found.sorted
+    found.map(_.id).sorted
   }
 
   /** Allocate the next batch id and durably record the run row. */

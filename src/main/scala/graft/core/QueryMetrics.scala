@@ -3,6 +3,7 @@ package graft.core
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The per-query execution record: one SparkListener that accounts each
   * job group's jobs, stages and tasks.
@@ -13,6 +14,12 @@ import org.apache.spark.scheduler._
   * reset-and-accumulate counter would charge them to the innocent
   * neighbor. TaskEnd and StageCompleted carry no group, so `onJobStart`
   * records stageId → group and the rest is attributed through the stage.
+  *
+  * A stage is named by the first graft frames of its call site. AQE
+  * submits query stages from its own thread pool, whose call site holds
+  * no graft frame; such a stage is named by the call site of its SQL
+  * execution (`spark.sql.execution.id` in the job's properties), taken
+  * from the execution's start event.
   *
   * Jobs started inside [[building]] (the query's construction, before its
   * action: `Tables` schema inference, `Broadcasts.bounded`'s count,
@@ -26,7 +33,10 @@ import org.apache.spark.scheduler._
 final class QueryMetrics private (sc: SparkContext) extends SparkListener {
   import QueryMetrics._
 
-  private val stageGroup = new ConcurrentHashMap[Int, String]()
+  /** stage id → (job group, SQL execution id) */
+  private val stageGroup = new ConcurrentHashMap[Int, (String, Option[Long])]()
+  /** execution id → (job group, graft call site) */
+  private val execSite = new ConcurrentHashMap[Long, (String, String)]()
   private val groups = new ConcurrentHashMap[String, Record]()
 
   private def add(group: String, delta: Record): Unit = {
@@ -37,16 +47,24 @@ final class QueryMetrics private (sc: SparkContext) extends SparkListener {
     Option(e.properties).flatMap(p => Option(p.getProperty(GroupKey))).foreach { g =>
       val build = Option(e.properties.getProperty(TagsKey))
         .exists(_.split(",").contains(BuildTag))
-      e.stageIds.foreach(stageGroup.put(_, g))
+      val exec = Option(e.properties.getProperty(ExecutionKey)).map(_.toLong)
+      e.stageIds.foreach(stageGroup.put(_, (g, exec)))
       add(g, Record(jobs = 1, buildJobs = if (build) 1 else 0))
     }
 
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      for (g <- s.jobGroupId; site = graftSite(s.details) if site.nonEmpty)
+        execSite.put(s.executionId, (g, site))
+    case _ =>
+  }
+
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-    Option(stageGroup.get(e.stageInfo.stageId)).foreach { g =>
+    Option(stageGroup.get(e.stageInfo.stageId)).foreach { case (g, exec) =>
       val si = e.stageInfo
-      val site = si.details.linesIterator.map(_.trim)
-        .filter(l => l.startsWith("graft.") && !HarnessFrames.exists(l.startsWith))
-        .take(2).mkString(" <- ")
+      val site = Some(graftSite(si.details)).filter(_.nonEmpty)
+        .orElse(exec.flatMap(x => Option(execSite.get(x))).map(_._2))
+        .getOrElse("")
       val name = si.name.takeWhile(_ != '\n') + (if (site.isEmpty) "" else s" | $site")
       val ms = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
       add(g, Record(stages = 1,
@@ -54,7 +72,7 @@ final class QueryMetrics private (sc: SparkContext) extends SparkListener {
     }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-    Option(stageGroup.get(e.stageId)).foreach { g =>
+    Option(stageGroup.get(e.stageId)).foreach { case (g, _) =>
       val failed = if (e.taskInfo.successful) 0L else 1L
       add(g, Option(e.taskMetrics).fold(
           Record(tasks = 1, failedTasks = failed)) { m =>
@@ -92,7 +110,8 @@ final class QueryMetrics private (sc: SparkContext) extends SparkListener {
     groups.keySet.forEach { g =>
       if (g.startsWith(name + "#")) Option(groups.remove(g)).foreach(x => r += x)
     }
-    stageGroup.values.removeIf(_.startsWith(name + "#"))
+    stageGroup.values.removeIf(_._1.startsWith(name + "#"))
+    execSite.values.removeIf(_._1.startsWith(name + "#"))
     r.copy(partial = !drained)
   }
 }
@@ -100,12 +119,21 @@ final class QueryMetrics private (sc: SparkContext) extends SparkListener {
 object QueryMetrics {
   private val GroupKey = "spark.jobGroup.id"
   private val TagsKey = "spark.job.tags"
+  private val ExecutionKey = "spark.sql.execution.id"
   private val BuildTag = "graft-build"
   private val SlowestStages = 8
-  /** Frames of the code that runs a query rather than builds it; a
+  /** Classes of the code that runs a query rather than builds it; a
     * stage's call site names the first graft frames outside these. */
   private val HarnessFrames =
     Seq("graft.Bench", "graft.Verify", "graft.core.Watchdog", "graft.core.QueryMetrics")
+
+  /** The first two graft frames of a call site's long form, outside the
+    * harness (a frame is `<class>.<method>(<file>:<line>)`), or "". */
+  private def graftSite(details: String): String =
+    details.linesIterator.map(_.trim)
+      .filter(l => l.startsWith("graft.") && !HarnessFrames.exists(h =>
+        l.startsWith(h + ".") || l.startsWith(h + "$")))
+      .take(2).mkString(" <- ")
 
   def register(sc: SparkContext): QueryMetrics = {
     val m = new QueryMetrics(sc)

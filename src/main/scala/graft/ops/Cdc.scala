@@ -159,11 +159,8 @@ object Cdc {
     * invisible, a replayed version overwrites exactly its own subtree,
     * and the committed version chain is the table's time-travel axis.
     */
-  def writeSnapshot(df: DataFrame, path: String, version: Long): Unit = {
-    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/data/batch=$version")
-    graft.core.IndexCommits.mark(df.sparkSession, path, s"batch_$version")
-  }
+  def writeSnapshot(df: DataFrame, path: String, version: Long): Unit =
+    graft.core.IndexCommits.dataStore(df.sparkSession, path).write(version, df)
 
   /** Read the LATEST committed snapshot version (or, with `asOf`, the
     * latest committed version ≤ it — snapshot time travel, the
@@ -174,13 +171,10 @@ object Cdc {
     */
   def serveSnapshot(spark: org.apache.spark.sql.SparkSession, path: String,
                     asOf: Option[Long] = None): DataFrame = {
-    val state = asOf match {
-      case Some(v) => graft.core.IndexCommits.servedStateAsOf(spark, path, v)
-      case None => graft.core.IndexCommits.servedState(spark, path)
-    }
+    val store = graft.core.IndexCommits.dataStore(spark, path)
+    val state = store.snapshot(asOf.getOrElse(Long.MaxValue))
     require(state.batches.nonEmpty, s"no committed snapshot under $path")
-    val latest = state.batches.max
-    spark.read.parquet(s"$path/data/batch=$latest")
+    store.unit(state.batches.max)
   }
 
   /** DIFF two committed snapshot versions — the "what did this MERGE

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.IndexCommits
+
 /** Deduplication operators for large-scale corpus curation (north-star
   * extensions): exact, MinHash-LSH, SimHash, n-gram Jaccard, and
   * embedding-cosine near-dup.
@@ -422,8 +424,8 @@ object Dedup {
     *    the corpus text, so serving candidates reads the band table,
     *    never the historical corpus;
     *  - ingesting a batch shingles/hashes ONLY that batch (cost ∝
-    *    batch) and appends under `batch=<id>` with the shared
-    *    [[graft.core.IndexCommits]] marker discipline — crash-invisible,
+    *    batch) and appends a unit to a shared
+    *    [[graft.core.IndexCommits]] store — crash-invisible,
     *    same-id retry idempotent, the [[Retrieval.appendToIndex]] /
     *    [[Similarity.ivfAppendLayout]] contract on a third index family;
     *  - deletes are id tombstones; compaction folds served − tombstones
@@ -437,15 +439,10 @@ object Dedup {
   def writeBandIndex(docs: DataFrame, idCol: String, textCol: String,
                      path: String, shingler: Shingler = Shingler.words(5),
                      bandsN: Int = 2, rowsPerBand: Int = 3): Unit = {
-    val spark = docs.sparkSession
-    val fsys = graft.core.IndexCommits.fs(spark, path)
-    fsys.delete(new org.apache.hadoop.fs.Path(path + "/data"), true)
-    fsys.delete(new org.apache.hadoop.fs.Path(path + "/tombstones"), true)
-    fsys.delete(new org.apache.hadoop.fs.Path(path + "/commits"), true)
-    writeBandBatch(
-      bandRowsOf(docs, idCol, textCol, shingler, bandsN, rowsPerBand),
-      path, 0L)
-    graft.core.IndexCommits.mark(spark, path, "batch_0")
+    val store = bandStore(docs.sparkSession, path)
+    store.reset()
+    store.write(0L,
+      bandRowsOf(docs, idCol, textCol, shingler, bandsN, rowsPerBand))
   }
 
   /** Incremental ingest: band rows of the NEW batch only. Caller owns
@@ -456,56 +453,24 @@ object Dedup {
                         shingler: Shingler = Shingler.words(5),
                         bandsN: Int = 2, rowsPerBand: Int = 3): Unit = {
     require(batchId > 0, "batch 0 is the full build; appends use fresh ids")
-    writeBandBatch(
-      bandRowsOf(docs, idCol, textCol, shingler, bandsN, rowsPerBand),
-      path, batchId)
-    graft.core.IndexCommits.mark(docs.sparkSession, path, s"batch_$batchId")
+    bandStore(docs.sparkSession, path).write(batchId,
+      bandRowsOf(docs, idCol, textCol, shingler, bandsN, rowsPerBand))
   }
 
-  private def writeBandBatch(rows: DataFrame, path: String,
-                             batchId: Long): Unit = {
-    import org.apache.spark.sql.SaveMode
-    if (rows.isEmpty) {
-      // schema-bearing empty unit (the Similarity.writeLayoutRows guard):
-      // clear any crashed partitioned attempt, then write the empty
-      // frame under one band directory so partition discovery survives
-      graft.core.IndexCommits.fs(rows.sparkSession, path)
-        .delete(new org.apache.hadoop.fs.Path(s"$path/data/batch=$batchId"),
-          true)
-      rows.drop("band").repartition(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/data/batch=$batchId/band=0")
-    } else
-      rows.write.mode(SaveMode.Overwrite)
-        .partitionBy("band").parquet(s"$path/data/batch=$batchId")
-  }
+  /** The band table's units: one `data` part, one directory per band. */
+  private def bandStore(spark: org.apache.spark.sql.SparkSession,
+                        path: String): IndexCommits.Store =
+    IndexCommits.Store(spark, path,
+      Seq(IndexCommits.Part("data", partitionBy = Some("band"))))
 
   /** Tombstone-delete documents from the band index (id list under
     * `tombstones/batch=<id>`, `del_<id>` marker — the shared state
     * machine; serving anti-joins AFTER batch pruning).
     */
   def deleteFromBandIndex(ids: DataFrame, idCol: String, path: String,
-                          batchId: Long): Unit = {
-    val spark = ids.sparkSession
-    if (graft.core.IndexCommits.isCommitted(spark, path, s"del_$batchId"))
-      return
-    ids.select(col(idCol)).distinct().repartition(1)
-      .write.mode("overwrite").parquet(s"$path/tombstones/batch=$batchId")
-    graft.core.IndexCommits.mark(spark, path, s"del_$batchId")
-  }
-
-  private def servedBandRows(spark: org.apache.spark.sql.SparkSession,
-                             path: String, idCol: String,
-                             state: graft.core.IndexCommits.State): DataFrame = {
-    val base = spark.read.parquet(path + "/data")
-      .filter(col("batch").isin(state.batches: _*))
-    if (state.deletes.isEmpty) base
-    else base.join(
-      spark.read.parquet(path + "/tombstones")
-        .filter(col("batch").isin(state.deletes: _*))
-        .select(col(idCol)),
-      Seq(idCol), "left_anti")
-  }
+                          batchId: Long): Unit =
+    bandStore(ids.sparkSession, path)
+      .delete(batchId, ids.select(col(idCol)).distinct())
 
   /** Fold served − tombstones into one fresh batch (band partitioning
     * preserved; rows keep their persisted signatures — nothing is
@@ -513,21 +478,14 @@ object Dedup {
     */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String, idCol: String, newBatchId: Long): Unit = {
-    if (graft.core.IndexCommits.isCommitted(spark, path,
-        s"compact_$newBatchId")) return
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    graft.core.IndexCommits.requireFreshId(newBatchId, state)
-    writeBandBatch(servedBandRows(spark, path, idCol, state).drop("batch"),
-      path, newBatchId)
-    graft.core.IndexCommits.commitCompaction(spark, path, newBatchId, state)
+    val store = bandStore(spark, path)
+    store.compact(newBatchId)(state =>
+      Seq(store.served(state, idCol = Some(idCol)).drop("batch")))
   }
 
   def vacuumBandIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): Int =
-    graft.core.IndexCommits.vacuum(spark, path, {
-      case ("del", id) => Seq(s"tombstones/batch=$id")
-      case (_, id)     => Seq(s"data/batch=$id")
-    })
+    bandStore(spark, path).vacuum()
 
   /** Serve near-dup candidates from the at-rest band table: committed
     * batches minus committed tombstones, the band-frequency window
@@ -538,10 +496,9 @@ object Dedup {
   def bandIndexCandidates(spark: org.apache.spark.sql.SparkSession,
                           path: String, idCol: String,
                           maxBandDf: Int = 256): DataFrame = {
-    val state = graft.core.IndexCommits.servedState(spark, path)
     val wBand = Window.partitionBy("band", "h")
     val bands = graft.core.Caches.track(
-      servedBandRows(spark, path, idCol, state)
+      bandStore(spark, path).served(idCol = Some(idCol))
         .select(col(idCol), col("band"), col("h"))
         .withColumn("df_b", count(lit(1)).over(wBand)))
     pairsFromBands(bands, idCol, maxBandDf)

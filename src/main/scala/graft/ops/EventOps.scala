@@ -445,9 +445,7 @@ object EventOps {
                                     userCol: String, tsCol: String,
                                     windows: Seq[Int],
                                     tol: Double = 0.05): DataFrame = {
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    val daySk = spark.read.parquet(s"$path/data")
-      .filter(col("batch").isin(state.batches: _*))
+    val daySk = graft.core.IndexCommits.dataStore(spark, path).served()
       .groupBy(col("day"))
       .agg(expr("hll_union_agg(sk, false)").as("sk"))
     activeUsersGate(daySk, events, userCol, tsCol, windows, tol)
@@ -956,9 +954,7 @@ object EventOps {
     */
   def backtestServe(spark: org.apache.spark.sql.SparkSession,
                     path: String, season: Int, holdout: Int): DataFrame = {
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    val daily = spark.read.parquet(s"$path/data")
-      .filter(col("batch").isin(state.batches: _*))
+    val daily = graft.core.IndexCommits.dataStore(spark, path).served()
       .groupBy(col("event_type"), col("__day"))
       .agg(sum(col("__n")).as("__n"))
     backtestFromDaily(daily, season, holdout)

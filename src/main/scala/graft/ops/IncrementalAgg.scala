@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -47,11 +47,9 @@ object IncrementalAgg {
     * after the data, so a crashed attempt is invisible and a replay is
     * exact.
     */
-  def writeBatch(partialRows: DataFrame, path: String, batchId: Long): Unit = {
-    partialRows.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/data/batch=$batchId")
-    IndexCommits.mark(partialRows.sparkSession, path, s"batch_$batchId")
-  }
+  def writeBatch(partialRows: DataFrame, path: String, batchId: Long): Unit =
+    IndexCommits.dataStore(partialRows.sparkSession, path)
+      .write(batchId, partialRows)
 
   /** Per-key HLL sketch partials of one batch — the MERGEABLE
     * distinct-count unit (a distinct count itself does not merge across
@@ -76,9 +74,7 @@ object IncrementalAgg {
   def serveDistinct(spark: SparkSession, path: String, facts: DataFrame,
                     keyCol: String, valueCol: String,
                     tol: Double = 0.05): DataFrame = {
-    val state = IndexCommits.servedState(spark, path)
-    val merged = spark.read.parquet(s"$path/data")
-      .filter(col("batch").isin(state.batches: _*))
+    val merged = IndexCommits.dataStore(spark, path).served()
       .groupBy(col(keyCol))
       .agg(expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("__est"))
     val exact = facts.groupBy(col(keyCol))
@@ -102,12 +98,8 @@ object IncrementalAgg {
     */
   def serve(spark: SparkSession, path: String, keyCol: String,
             asOf: Option[Long] = None): DataFrame = {
-    val state = asOf match {
-      case Some(b) => IndexCommits.servedStateAsOf(spark, path, b)
-      case None => IndexCommits.servedState(spark, path)
-    }
-    val parts = spark.read.parquet(s"$path/data")
-      .filter(col("batch").isin(state.batches: _*))
+    val store = IndexCommits.dataStore(spark, path)
+    val parts = store.served(store.snapshot(asOf.getOrElse(Long.MaxValue)))
     parts.groupBy(col(keyCol))
       .agg(sum(col("n")).as("n"),
         sum(col("s")).as("__s"),

@@ -210,9 +210,7 @@ object Profile {
   def serveSketchProfile(spark: org.apache.spark.sql.SparkSession,
                          path: String, k: Int = 256): DataFrame = {
     val rse = 1.0 / math.sqrt(k - 2.0)
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    val parts = spark.read.parquet(s"$path/data")
-      .filter(col("batch").isin(state.batches: _*))
+    val parts = graft.core.IndexCommits.dataStore(spark, path).served()
     val sums = parts.groupBy(col("col_name"))
       .agg(sum(col("n_nonnull")).as("n_nonnull"),
         sum(col("n_rows")).as("n_rows"))
@@ -672,9 +670,7 @@ object Profile {
     */
   def driftServe(spark: org.apache.spark.sql.SparkSession,
                  path: String): DataFrame = {
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    val h = spark.read.parquet(s"$path/data")
-      .filter(col("batch").isin(state.batches: _*))
+    val h = graft.core.IndexCommits.dataStore(spark, path).served()
       .groupBy(col("bucket"))
       .agg(sum(col("ref_n")).as("ref_n"), sum(col("cur_n")).as("cur_n"))
     chi2Report(h, "bucket")
@@ -1192,9 +1188,7 @@ object Profile {
                           qs: Seq[Double], lo: Double, hi: Double,
                           bins: Int): DataFrame = {
     require(qs.nonEmpty && hi > lo, "need quantiles and hi > lo")
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    val hist = spark.read.parquet(s"$path/data")
-      .filter(col("batch").isin(state.batches: _*))
+    val hist = graft.core.IndexCommits.dataStore(spark, path).served()
       .groupBy(col("__b")).agg(sum(col("c")).as("c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val n = hist.values.sum
@@ -1224,9 +1218,7 @@ object Profile {
     */
   def checksumServe(spark: org.apache.spark.sql.SparkSession,
                     path: String): DataFrame = {
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    spark.read.parquet(s"$path/data")
-      .filter(col("batch").isin(state.batches: _*))
+    graft.core.IndexCommits.dataStore(spark, path).served()
       .agg(sum(col("n")).as("n_rows"),
         sum(col("s")).cast("string").as("checksum_sum"),
         expr("bit_xor(x)").as("checksum_xor"),

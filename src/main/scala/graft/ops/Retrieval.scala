@@ -5,6 +5,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.IndexCommits
+
 /** Sparse text retrieval over the document corpus: a distributed inverted
   * index and BM25 ranked search — the retrieval half of a training-data
   * pipeline (dataset search, decontamination lookups, quality-by-query
@@ -102,12 +104,7 @@ object Retrieval {
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
                  path: String): Unit = {
     // a fresh build owns the whole directory: clear any previous batches
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/postings"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/stats"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/tombstones"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/commits"), true)
+    textStore(docs.sparkSession, path).reset()
     writeBatch(docs, idCol, textCol, path, batchId = 0L)
   }
 
@@ -125,8 +122,8 @@ object Retrieval {
     * committed per-batch stats rows (exact integers), so avgdl/N are
     * identical to a from-scratch build's.
     *
-    * An EMPTY batch still writes a schema-bearing parquet file (the
-    * single-partition write below): an empty-corpus index must serve an
+    * An EMPTY batch still gets a schema-bearing parquet file (the
+    * store's empty-unit guard): an empty-corpus index must serve an
     * empty result, not fail schema inference on a file-less directory.
     *
     * The postings layout (shared by full build and append — drift would
@@ -139,7 +136,6 @@ object Retrieval {
     */
   private def writeBatch(docs: DataFrame, idCol: String, textCol: String,
                          path: String, batchId: Long): Unit = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = docs.sparkSession
     // cached: the batch feeds the stats delta AND the postings write —
     // one tokenization pass, and the two can never disagree even over a
@@ -158,7 +154,7 @@ object Retrieval {
         // deleted from the corpus stats, leaving N one too high forever
         // (breaking the rebuild-equivalence the specs pin). It also
         // makes "n_docs > 0 ⟹ ≥1 postings row" true by construction,
-        // which is exactly what the empty-file guard below needs.
+        // which is exactly what [[laidOut]] needs.
         posexplode_outer(col("__ws")).as(Seq("__pos", "term")))
       .groupBy(col("term"), col(idCol), col("dl"))
       // POSITIONAL postings: tf for BM25, the sorted position list for
@@ -167,49 +163,40 @@ object Retrieval {
       .agg(count(col("term")).as("tf"), // 0 on the marker row
         array_sort(collect_list(col("__pos").cast("integer")))
           .as("positions"))
-    // empty batch: a range repartition of zero rows plans zero tasks and
-    // writes zero files, which would break schema inference on the serve
-    // path — force one (empty, schema-bearing) file instead. n_docs == 0
-    // is exactly the zero-rows condition because every doc — including a
-    // zero-word one — emits at least its marker row (posexplode_outer).
-    val laidOut =
-      if (d.getLong(1) == 0L) postings.repartition(1)
-      else postings.repartitionByRange(col("term"), col(idCol))
-        .sortWithinPartitions("term", idCol)
-    laidOut.write.mode("overwrite").parquet(s"$path/postings/batch=$batchId")
+    // both halves, then the marker (readers filter on it)
+    textStore(spark, path).write(batchId,
+      laidOut(postings, idCol, d.getLong(1)),
+      statsRow(spark, d.getLong(0), d.getLong(1)))
+  }
+
+  /** The text index's units: `postings` and the 1-row `stats` delta. The
+    * marker state machine (batch_/del_/compact_ replay, atomic compaction
+    * commit, vacuum sweep) is the shared [[graft.core.IndexCommits]]. */
+  private def textStore(spark: org.apache.spark.sql.SparkSession,
+                        path: String): IndexCommits.Store =
+    IndexCommits.Store(spark, path,
+      Seq(IndexCommits.Part("postings"), IndexCommits.Part("stats")))
+
+  /** The postings layout of build, append and compaction: ranged by
+    * (term, doc), term-sorted within files. Zero docs means zero rows
+    * (every doc, a zero-word one too, emits at least its marker row), and
+    * there is nothing to range: the rows go as they are, and the store's
+    * empty-unit guard keeps the unit schema-bearing. */
+  private def laidOut(postings: DataFrame, idCol: String,
+                      nDocs: Long): DataFrame =
+    if (nDocs == 0L) postings
+    else postings.repartitionByRange(col("term"), col(idCol))
+      .sortWithinPartitions("term", idCol)
+
+  /** A unit's corpus-stats row: exact integer totals. */
+  private def statsRow(spark: org.apache.spark.sql.SparkSession,
+                       sumDl: Long, nDocs: Long): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(d.getLong(0), d.getLong(1))),
+        java.util.List.of(org.apache.spark.sql.Row(sumDl, nDocs)),
         StructType(Seq(StructField("sum_dl", LongType, nullable = false),
           StructField("n_docs", LongType, nullable = false))))
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/stats/batch=$batchId")
-    // both halves down: mark the batch committed (readers filter on this)
-    graft.core.IndexCommits.mark(spark, path, s"batch_$batchId")
-  }
-
-  // The marker state machine (batch_/del_/compact_ replay, atomic
-  // compaction commit, vacuum sweep) is the SHARED
-  // [[graft.core.IndexCommits]] — one implementation serves this text
-  // index and the IVF vector layout identically.
-  private type IndexState = graft.core.IndexCommits.State
-
-  private def servedState(spark: org.apache.spark.sql.SparkSession,
-                          path: String): IndexState =
-    graft.core.IndexCommits.servedState(spark, path)
-
-  /** The served tombstone relation (raw committed rows; an id may
-    * repeat across delete batches if the caller re-deleted it — the
-    * postings anti-join is insensitive to duplicates, and the stats
-    * path deduplicates before subtracting). None when no committed
-    * delete batch exists: the common case pays zero reads and plans no
-    * anti-join at all.
-    */
-  private def readTombstones(spark: org.apache.spark.sql.SparkSession,
-                             path: String,
-                             state: IndexState): Option[DataFrame] = {
-    if (state.deletes.isEmpty) None
-    else Some(spark.read.parquet(path + "/tombstones")
-      .filter(col("batch").isin(state.deletes: _*)))
   }
 
   /** The committed postings relation: the `batch=<id>` partition column
@@ -227,14 +214,8 @@ object Retrieval {
     */
   private def readPostings(spark: org.apache.spark.sql.SparkSession,
                            path: String, idCol: String,
-                           state: IndexState): DataFrame = {
-    val base = spark.read.parquet(path + "/postings")
-      .filter(col("batch").isin(state.batches: _*))
-    readTombstones(spark, path, state) match {
-      case None    => base
-      case Some(t) => base.join(t.select(col(idCol)), Seq(idCol), "left_anti")
-    }
-  }
+                           state: IndexCommits.State): DataFrame =
+    textStore(spark, path).served(state, "postings", Some(idCol))
 
   /** Served corpus totals: the sum over all committed per-batch stats
     * rows MINUS the committed tombstones' contribution (each deleted
@@ -245,16 +226,16 @@ object Retrieval {
     */
   private def readStats(spark: org.apache.spark.sql.SparkSession,
                         path: String, idCol: String,
-                        state: IndexState): DataFrame = {
-    val base = spark.read.parquet(path + "/stats")
-      .filter(col("batch").isin(state.batches: _*))
+                        state: IndexCommits.State): DataFrame = {
+    val store = textStore(spark, path)
+    val base = store.served(state, "stats")
       .agg(coalesce(sum("sum_dl"), lit(0L)).as("sum_dl"),
         coalesce(sum("n_docs"), lit(0L)).as("n_docs"))
-    readTombstones(spark, path, state) match {
+    store.tombstones(state) match {
       case None => base
       case Some(t) =>
         // dedupe before subtracting: an id re-deleted by a second batch
-        // must reduce N and Σdl exactly once
+        // (tombstone ids may repeat) must reduce N and Σdl exactly once
         val tomb = t.groupBy(col(idCol)).agg(max("dl").as("dl"))
           .agg(coalesce(sum("dl"), lit(0L)).as("__tdl"),
             count(lit(1)).as("__tn"))
@@ -285,7 +266,8 @@ object Retrieval {
     import spark.implicits._
     val slots = phrase.zipWithIndex.map { case (t, j) => (j, t) }
       .toDF("__slot", "term")
-    val starts = readPostings(spark, path, idCol, servedState(spark, path))
+    val starts = readPostings(spark, path, idCol,
+        textStore(spark, path).snapshot())
       .filter(col("term").isin(phrase.distinct: _*)) // pushed to the scan
       .join(broadcast(slots), "term") // a repeated word fans out per slot
       .select(col(idCol), col("__slot"),
@@ -323,7 +305,8 @@ object Retrieval {
                          path: String, idCol: String, termA: String,
                          termB: String, k: Int): DataFrame = {
     require(termA != termB, "two distinct terms")
-    val posts = readPostings(spark, path, idCol, servedState(spark, path))
+    val posts = readPostings(spark, path, idCol,
+        textStore(spark, path).snapshot())
       .filter(col("term").isin(termA, termB))
     val byDoc = posts.groupBy(col(idCol))
       .agg(
@@ -438,17 +421,14 @@ object Retrieval {
   def deleteFromIndex(docIds: DataFrame, idCol: String, path: String,
                       batchId: Long): Unit = {
     val spark = docIds.sparkSession
-    if (graft.core.IndexCommits.isCommitted(spark, path, s"del_$batchId"))
-      return // committed: the delta is already durable, recomputing would corrupt it
-    val tomb = readPostings(spark, path, idCol, servedState(spark, path))
-      .join(docIds.select(col(idCol)).distinct(), Seq(idCol))
-      .groupBy(col(idCol)).agg(max("dl").as("dl"))
+    val store = textStore(spark, path)
     // one file: a delete batch is ∝ its deleted docs (id + length), tiny
-    // relative to the index — and the single-partition write doubles as
-    // the schema-bearing-empty-file guard writeBatch needs
-    tomb.repartition(1).write.mode("overwrite")
-      .parquet(s"$path/tombstones/batch=$batchId")
-    graft.core.IndexCommits.mark(spark, path, s"del_$batchId")
+    // relative to the index. Once committed, the delta is durable and is
+    // not recomputed (that would corrupt it).
+    store.delete(batchId,
+      readPostings(spark, path, idCol, store.snapshot())
+        .join(docIds.select(col(idCol)).distinct(), Seq(idCol))
+        .groupBy(col(idCol)).agg(max("dl").as("dl")))
   }
 
   /** Compact the index: fold every served batch and every served
@@ -469,34 +449,17 @@ object Retrieval {
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                    idCol: String, newBatchId: Long): Unit = {
-    if (graft.core.IndexCommits.isCommitted(spark, path,
-        s"compact_$newBatchId")) return
-    val state = servedState(spark, path)
-    graft.core.IndexCommits.requireFreshId(newBatchId, state) // before any write
     // ONE state snapshot feeds the postings read, the stats read, AND the
-    // supersede list: a batch/delete committing mid-compaction is either
-    // entirely in (folded + superseded) or entirely out (still served
-    // beside the compacted batch) — never folded in but left live
-    val served = readPostings(spark, path, idCol, state).drop("batch")
-    val d = readStats(spark, path, idCol, state).head()
-    // n_docs == 0 ⟺ zero served rows (every doc carries at least its
-    // null-term marker row, and the tombstone anti-join removes marker
-    // and postings rows together)
-    val laidOut =
-      if (d.getLong(1) == 0L) served.repartition(1) // schema-bearing empty file
-      else served.repartitionByRange(col("term"), col(idCol))
-        .sortWithinPartitions("term", idCol)
-    laidOut.write.mode("overwrite").parquet(s"$path/postings/batch=$newBatchId")
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(d.getLong(0), d.getLong(1))),
-        StructType(Seq(StructField("sum_dl", LongType, nullable = false),
-          StructField("n_docs", LongType, nullable = false))))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/stats/batch=$newBatchId")
-    // the commit point: one atomic rename both reveals the new batch
-    // and hides the old set (IndexCommits enforces newId > served ids)
-    graft.core.IndexCommits.commitCompaction(spark, path, newBatchId, state)
+    // supersede list (the store's compaction contract)
+    textStore(spark, path).compact(newBatchId) { state =>
+      val d = readStats(spark, path, idCol, state).head()
+      // n_docs == 0 ⟺ zero served rows (every doc carries at least its
+      // null-term marker row, and the tombstone anti-join removes marker
+      // and postings rows together)
+      Seq(laidOut(readPostings(spark, path, idCol, state).drop("batch"),
+          idCol, d.getLong(1)),
+        statsRow(spark, d.getLong(0), d.getLong(1)))
+    }
   }
 
   /** Sweep directories no longer reachable from the served state —
@@ -507,10 +470,7 @@ object Retrieval {
     */
   def vacuumIndex(spark: org.apache.spark.sql.SparkSession,
                   path: String): Int =
-    graft.core.IndexCommits.vacuum(spark, path, {
-      case ("del", id) => Seq(s"tombstones/batch=$id")
-      case (_, id)     => Seq(s"postings/batch=$id", s"stats/batch=$id")
-    })
+    textStore(spark, path).vacuum()
 
   /** RATIO-IDF BM25 (the [[bm25]] variant — see that method's doc for
     * the deviation from textbook BM25) served from the written index:
@@ -530,7 +490,7 @@ object Retrieval {
     // replay ([[graft.core.IndexCommits.servedStateAsOf]]) — the index
     // as it stood after that batch committed, with vacuum as the
     // retention horizon.
-    val state = graft.core.IndexCommits.servedStateAsOf(spark, path, asOf)
+    val state = textStore(spark, path).snapshot(asOf)
     val stats = readStats(spark, path, idCol, state)
       // n_docs = 0 (an empty index) must serve an empty result, not a
       // NaN-poisoned avgdl — the guard keeps the division well-defined

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.IndexCommits
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (north-star extension): brute-force cosine top-k as the exact baseline,
   * and an IVF (inverted-file) variant as the scale path.
@@ -927,11 +929,7 @@ object Similarity {
     import org.apache.spark.sql.SaveMode
     val spark = emb.sparkSession
     // a fresh build owns the directory: clear previous batches + markers
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/data"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/tombstones"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/commits"), true)
+    layoutStore(spark, path).reset()
     // trainedCents: the one-training-many-consumers seam the scan-path
     // probes already have — build the layout from a sample-trained or
     // previously trained quantizer instead of an in-builder full train
@@ -974,43 +972,17 @@ object Similarity {
 
   private def writeLayoutBatch(emb: DataFrame, idCol: String, vecCol: String,
                                path: String, cents: Seq[Seq[Double]],
-                               batchId: Long): Unit = {
-    writeLayoutRows(
-      emb.withColumn("ivf_cluster", nearestCluster(col(vecCol), cents)),
-      path, batchId)
-    graft.core.IndexCommits.mark(emb.sparkSession, path, s"batch_$batchId")
-  }
+                               batchId: Long): Unit =
+    layoutStore(emb.sparkSession, path).write(batchId,
+      emb.withColumn("ivf_cluster", nearestCluster(col(vecCol), cents)))
 
-  /** The one physical layout writer (build, append and compaction all
-    * end here — drift would break the serve-identical guarantee). An
-    * EMPTY unit needs special handling: `partitionBy` of zero rows
-    * writes zero files, and a layout whose every live batch is file-less
-    * fails schema inference at the probe (the
-    * [[Retrieval.writeBatch]] empty-corpus guard, vector edition — here
-    * reachable via compaction of a fully-deleted layout once vacuum
-    * removes the old directories). The guard writes the empty frame
-    * directly under an `ivf_cluster=0` subdirectory — byte-identical to
-    * what partitionBy produces (partition values live in directory
-    * names, not the file), so partition discovery stays consistent and
-    * the probe serves an empty result instead of throwing.
-    */
-  private def writeLayoutRows(rows: DataFrame, path: String,
-                              batchId: Long): Unit = {
-    import org.apache.spark.sql.SaveMode
-    if (rows.isEmpty) {
-      // clear the whole unit first: the nested-subdir overwrite below
-      // only owns ivf_cluster=0, but a crashed partitioned attempt may
-      // have left other cluster dirs behind (retries must be exact)
-      graft.core.IndexCommits.fs(rows.sparkSession, path)
-        .delete(new org.apache.hadoop.fs.Path(s"$path/data/batch=$batchId"),
-          true)
-      rows.drop("ivf_cluster").repartition(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/data/batch=$batchId/ivf_cluster=0")
-    } else
-      rows.write.mode(SaveMode.Overwrite)
-        .partitionBy("ivf_cluster").parquet(s"$path/data/batch=$batchId")
-  }
+  /** The IVF and IVFADC layouts' units: one `data` part, one directory
+    * per cluster. Build, append and compaction all write through it
+    * (drift would break the serve-identical guarantee); its empty-unit
+    * guard keeps a fully-deleted, compacted layout serving empty. */
+  private def layoutStore(spark: SparkSession, path: String): IndexCommits.Store =
+    IndexCommits.Store(spark, path,
+      Seq(IndexCommits.Part("data", partitionBy = Some("ivf_cluster"))))
 
   /** Tombstone-delete embeddings from the at-rest layout — the vector
     * side of [[Retrieval.deleteFromIndex]], same marker discipline via
@@ -1029,14 +1001,9 @@ object Similarity {
     * is live.
     */
   def ivfDeleteLayout(ids: DataFrame, idCol: String, path: String,
-                      batchId: Long): Unit = {
-    val spark = ids.sparkSession
-    if (graft.core.IndexCommits.isCommitted(spark, path, s"del_$batchId"))
-      return
-    ids.select(col(idCol)).distinct().repartition(1)
-      .write.mode("overwrite").parquet(s"$path/tombstones/batch=$batchId")
-    graft.core.IndexCommits.mark(spark, path, s"del_$batchId")
-  }
+                      batchId: Long): Unit =
+    layoutStore(ids.sparkSession, path)
+      .delete(batchId, ids.select(col(idCol)).distinct())
 
   /** Compact the at-rest IVF layout: fold every served batch minus the
     * served tombstones into ONE fresh batch (per-cluster partitioning
@@ -1049,39 +1016,24 @@ object Similarity {
     */
   def ivfCompactLayout(spark: SparkSession, path: String, idCol: String,
                        newBatchId: Long): Unit = {
-    if (graft.core.IndexCommits.isCommitted(spark, path,
-        s"compact_$newBatchId")) return
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    graft.core.IndexCommits.requireFreshId(newBatchId, state)
-    // shared writer: a compaction of a fully-deleted layout writes a
-    // schema-bearing empty unit instead of a file-less directory
-    writeLayoutRows(servedRows(spark, path, idCol, state).drop("batch"),
-      path, newBatchId)
-    graft.core.IndexCommits.commitCompaction(spark, path, newBatchId, state)
+    val store = layoutStore(spark, path)
+    store.compact(newBatchId)(state =>
+      Seq(store.served(state, idCol = Some(idCol)).drop("batch")))
   }
 
   /** Sweep superseded layout batches and tombstones (shared
     * [[graft.core.IndexCommits.vacuum]]). */
   def ivfVacuumLayout(spark: SparkSession, path: String): Int =
-    graft.core.IndexCommits.vacuum(spark, path, {
-      case ("del", id) => Seq(s"tombstones/batch=$id")
-      case (_, id)     => Seq(s"data/batch=$id")
-    })
+    layoutStore(spark, path).vacuum()
 
   /** The served layout relation: committed batches, committed
     * tombstones anti-joined away. Keeps the `batch` and `ivf_cluster`
     * partition columns (callers prune/drop as needed).
     */
   private def servedRows(spark: SparkSession, path: String, idCol: String,
-                         state: graft.core.IndexCommits.State): DataFrame = {
-    val base = spark.read.parquet(path + "/data")
-      .filter(col("batch").isin(state.batches: _*))
-    if (state.deletes.isEmpty) base
-    else base.join(
-      spark.read.parquet(path + "/tombstones")
-        .filter(col("batch").isin(state.deletes: _*))
-        .select(col(idCol)),
-      Seq(idCol), "left_anti")
+                         asOf: Long = Long.MaxValue): DataFrame = {
+    val store = layoutStore(spark, path)
+    store.served(store.snapshot(asOf), idCol = Some(idCol))
   }
 
   private def centroidsPath(path: String): String =
@@ -1113,8 +1065,7 @@ object Similarity {
     // so the vector layout gets the same monotone-prefix replay for
     // free; centroids are the index's immutable identity and need no
     // versioning)
-    val state = graft.core.IndexCommits.servedStateAsOf(spark, path, asOf)
-    servedRows(spark, path, idCol, state)
+    servedRows(spark, path, idCol, asOf)
       // both are partition columns: uncommitted/superseded batches and
       // non-probed clusters prune at the scan, before any file opens
       // (the cluster predicate pushes below the tombstone anti-join);
@@ -1147,8 +1098,7 @@ object Similarity {
                           vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cents = readCentroids(spark, path)
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    val rows = servedRows(spark, path, idCol, state)
+    val rows = servedRows(spark, path, idCol)
     val nrm = (c: Column) => greatest(Dedup.normExact(c), lit(1e-30))
     val anchors = rows.filter(col(idCol).isin(anchorIds: _*))
       .select(col(idCol).as("anchor_id"), col(vecCol).as("__avec"),
@@ -1216,8 +1166,7 @@ object Similarity {
     import spark.implicits._
     val maxP = nprobes.max
     val cents = readCentroids(spark, path)
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    val rows = servedRows(spark, path, idCol, state)
+    val rows = servedRows(spark, path, idCol)
     val nrm = (c: Column) => greatest(Dedup.normExact(c), lit(1e-30))
     val anchors = rows.filter(col(idCol).isin(anchorIds: _*))
       .select(col(idCol).as("anchor_id"), col(vecCol).as("__avec"),
@@ -2142,11 +2091,7 @@ object Similarity {
                         trainedBooks: Option[Seq[Seq[Seq[Double]]]] = None): Unit = {
     import org.apache.spark.sql.SaveMode
     val spark = emb.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/data"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/tombstones"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/commits"), true)
+    layoutStore(spark, path).reset()
     // trainedCoarse/trainedBooks: build the layout from an injected
     // quantizer pair (sample-trained, or shared across consumers — the
     // scan path's seam, ivfAdcTopK). The pair is one identity: books
@@ -2170,8 +2115,7 @@ object Similarity {
     val rows = pqEncode(resid, "__g_resid", books, dims)
       .select(col(idCol), col(vecCol), col("pq_code"),
         col("__g_coarse").as("ivf_cluster"))
-    writeLayoutRows(rows, path, batchId = 0L)
-    graft.core.IndexCommits.mark(spark, path, "batch_0")
+    layoutStore(spark, path).write(0L, rows)
   }
 
   /** Incremental maintenance for the at-rest IVFADC layout — the
@@ -2207,8 +2151,7 @@ object Similarity {
       "__g_resid", books, dims)
       .select(col(idCol), col(vecCol), col("pq_code"),
         col("__g_coarse").as("ivf_cluster"))
-    writeLayoutRows(rows, path, batchId)
-    graft.core.IndexCommits.mark(spark, path, s"batch_$batchId")
+    layoutStore(spark, path).write(batchId, rows)
   }
 
   /** Probe the at-rest IVFADC layout. Two pruned scans: the ADC stage
@@ -2233,8 +2176,9 @@ object Similarity {
     // the compressed layout — ONE IndexCommits state machine; the
     // persisted quantizer pair is the index's immutable identity, so
     // every historical state decodes with the same tables)
-    val state = graft.core.IndexCommits.servedStateAsOf(spark, path, asOf)
-    def probedRows = servedRows(spark, path, idCol, state)
+    val store = layoutStore(spark, path)
+    val state = store.snapshot(asOf)
+    def probedRows = store.served(state, idCol = Some(idCol))
       .filter(col("ivf_cluster").isin(probed.map(Integer.valueOf): _*))
     val short = probedRows
       .select(col(idCol), col("pq_code"), col("ivf_cluster"))
@@ -2490,10 +2434,7 @@ object Similarity {
   def graphAnnWriteLayout(emb: DataFrame, idCol: String, vecCol: String,
                           blockCol: String, path: String,
                           kNbrs: Int = 5): Unit = {
-    val spark = emb.sparkSession
-    val fs = graft.core.IndexCommits.fs(spark, path)
-    Seq("/vectors", "/edges", "/commits").foreach(s =>
-      fs.delete(new org.apache.hadoop.fs.Path(path + s), true))
+    graphStore(emb.sparkSession, path).reset()
     writeGraphBatch(emb.select(col(idCol), col(vecCol), col(blockCol)),
       knnGraph(emb, idCol, vecCol, blockCol, kNbrs), path, 0L,
       blockCol = Some(blockCol))
@@ -2535,8 +2476,8 @@ object Similarity {
     // block) let row-group stats skip whole blocks.
     val touched = fresh.select(col(blockCol)).distinct()
       .collect().map(_.get(0))
-    val existing = servedGraphVectors(spark, path, idCol,
-        graft.core.IndexCommits.servedState(spark, path))
+    val existing = graphStore(spark, path)
+      .served(part = "vectors", idCol = Some(idCol))
       .filter(if (touched.isEmpty) lit(false)
               else col(blockCol).isin(touched: _*))
       .select(col(idCol), col(vecCol), col(blockCol))
@@ -2570,11 +2511,11 @@ object Similarity {
                           blockCol: String = "label",
                           beam: Int = 16, hops: Int = 3,
                           asOf: Long = Long.MaxValue): DataFrame = {
-    val state = graft.core.IndexCommits.servedStateAsOf(spark, path, asOf)
+    val store = graphStore(spark, path)
+    val state = store.snapshot(asOf)
     val vecs = graft.core.Caches.track(
-      servedGraphVectors(spark, path, idCol, state))
-    val g = graft.core.Caches.track(
-      servedGraphEdges(spark, path, idCol, state))
+      store.served(state, "vectors", Some(idCol)))
+    val g = graft.core.Caches.track(servedGraphEdges(store, state, idCol))
     beamServe(vecs, g, idCol, vecCol, blockCol, query, k, beam, hops)
   }
 
@@ -2584,7 +2525,8 @@ object Similarity {
     */
   def graphAnnDeleteLayout(ids: DataFrame, idCol: String, path: String,
                            batchId: Long): Unit =
-    ivfDeleteLayout(ids, idCol, path, batchId)
+    graphStore(ids.sparkSession, path)
+      .delete(batchId, ids.select(col(idCol)).distinct())
 
   /** Compact the at-rest graph index: fold served vectors (minus
     * tombstones) and served LIVE edges (minus edges touching a
@@ -2598,77 +2540,48 @@ object Similarity {
   def graphAnnCompactLayout(spark: SparkSession, path: String,
                             idCol: String, newBatchId: Long,
                             blockCol: String = "label"): Unit = {
-    import org.apache.spark.sql.SaveMode
-    if (graft.core.IndexCommits.isCommitted(spark, path,
-        s"compact_$newBatchId")) return
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    graft.core.IndexCommits.requireFreshId(newBatchId, state)
-    // empty-unit guard (the writeLayoutRows contract): a fully-deleted
-    // layout still needs ONE schema-bearing file per side or the probe
-    // fails parquet schema inference
-    def writeSide(df: DataFrame, dir: String): Unit =
-      (if (df.isEmpty) df.repartition(1) else df)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/$dir/batch=$newBatchId")
-    val vecs = servedGraphVectors(spark, path, idCol, state).drop("batch")
-    // preserve the block clustering appends rely on for scan pruning —
-    // an unclustered compacted batch would quietly undo the
-    // touched-blocks row-group skip for every later append. The block
-    // column is threaded EXPLICITLY (callers know it, exactly as
-    // graphAnnAppendLayout takes it) instead of recovered positionally:
-    // positional recovery would silently cluster by the wrong column if
-    // the layout ever gained another scalar column. Validate loudly.
-    require(vecs.columns.contains(blockCol) && blockCol != idCol &&
-      !vecs.schema(blockCol).dataType.isInstanceOf[
-        org.apache.spark.sql.types.ArrayType],
-      s"block column '$blockCol' not a scalar non-id column of the " +
-        s"graph vectors layout (${vecs.columns.mkString(", ")})")
-    writeSide(vecs.repartition(col(blockCol)), "vectors")
-    writeSide(servedGraphEdges(spark, path, idCol, state), "edges")
-    graft.core.IndexCommits.commitCompaction(spark, path, newBatchId,
-      state)
+    val store = graphStore(spark, path)
+    store.compact(newBatchId) { state =>
+      val vecs = store.served(state, "vectors", Some(idCol)).drop("batch")
+      // preserve the block clustering appends rely on for scan pruning —
+      // an unclustered compacted batch would quietly undo the
+      // touched-blocks row-group skip for every later append. The block
+      // column is threaded EXPLICITLY (callers know it, exactly as
+      // graphAnnAppendLayout takes it) instead of recovered positionally:
+      // positional recovery would silently cluster by the wrong column if
+      // the layout ever gained another scalar column. Validate loudly.
+      require(vecs.columns.contains(blockCol) && blockCol != idCol &&
+        !vecs.schema(blockCol).dataType.isInstanceOf[
+          org.apache.spark.sql.types.ArrayType],
+        s"block column '$blockCol' not a scalar non-id column of the " +
+          s"graph vectors layout (${vecs.columns.mkString(", ")})")
+      Seq(vecs.repartition(col(blockCol)), servedGraphEdges(store, state, idCol))
+    }
   }
 
   /** Sweep superseded graph-index batches and tombstones (shared
     * [[graft.core.IndexCommits.vacuum]]). */
   def graphAnnVacuumLayout(spark: SparkSession, path: String): Int =
-    graft.core.IndexCommits.vacuum(spark, path, {
-      case ("del", id) => Seq(s"tombstones/batch=$id")
-      case (_, id)     => Seq(s"vectors/batch=$id", s"edges/batch=$id")
-    })
+    graphStore(spark, path).vacuum()
 
-  private def servedGraphVectors(spark: SparkSession, path: String,
-      idCol: String,
-      state: graft.core.IndexCommits.State): DataFrame = {
-    val base = spark.read.parquet(s"$path/vectors")
-      .filter(col("batch").isin(state.batches: _*))
-    if (state.deletes.isEmpty) base
-    else base.join(readGraphTombstones(spark, path, idCol, state),
-      Seq(idCol), "left_anti")
-  }
+  /** The graph index's units: `vectors` and `edges`. */
+  private def graphStore(spark: SparkSession, path: String): IndexCommits.Store =
+    IndexCommits.Store(spark, path,
+      Seq(IndexCommits.Part("vectors"), IndexCommits.Part("edges")))
 
-  private def servedGraphEdges(spark: SparkSession, path: String,
-      idCol: String,
-      state: graft.core.IndexCommits.State): DataFrame = {
-    val base = spark.read.parquet(s"$path/edges")
-      .filter(col("batch").isin(state.batches: _*))
-      .select(col("src"), col("dst"))
-    if (state.deletes.isEmpty) base
-    else {
-      val dead = readGraphTombstones(spark, path, idCol, state)
+  /** Served edges: a tombstoned node leaves the routing graph, so every
+    * edge touching one is dropped. */
+  private def servedGraphEdges(store: IndexCommits.Store,
+      state: IndexCommits.State, idCol: String): DataFrame = {
+    val base = store.served(state, "edges").select(col("src"), col("dst"))
+    store.tombstones(state).fold(base) { t =>
+      val dead = t.select(col(idCol))
       base
         .join(dead.select(col(idCol).as("src")), Seq("src"), "left_anti")
         .join(dead.select(col(idCol).as("dst")), Seq("dst"), "left_anti")
         .select(col("src"), col("dst"))
     }
   }
-
-  private def readGraphTombstones(spark: SparkSession, path: String,
-      idCol: String,
-      state: graft.core.IndexCommits.State): DataFrame =
-    spark.read.parquet(s"$path/tombstones")
-      .filter(col("batch").isin(state.deletes: _*))
-      .select(col(idCol))
 
   /** One graph-index batch. When `blockCol` is given, the vectors are
     * CLUSTERED by block before the write (one exchange of the batch —
@@ -2681,13 +2594,7 @@ object Similarity {
   private def writeGraphBatch(vecs: DataFrame, edges: DataFrame,
                               path: String, batchId: Long,
                               blockCol: Option[String] = None): Unit = {
-    import org.apache.spark.sql.SaveMode
     val clustered = blockCol.fold(vecs)(b => vecs.repartition(col(b)))
-    clustered.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/vectors/batch=$batchId")
-    edges.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/edges/batch=$batchId")
-    graft.core.IndexCommits.mark(vecs.sparkSession, path,
-      s"batch_$batchId")
+    graphStore(vecs.sparkSession, path).write(batchId, clustered, edges)
   }
 }

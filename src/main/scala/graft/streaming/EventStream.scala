@@ -783,9 +783,7 @@ object EventStream {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      val state = graft.core.IndexCommits.servedState(spark, path)
-      val merged = spark.read.parquet(s"$path/data")
-        .filter(col("batch").isin(state.batches: _*))
+      val merged = graft.core.IndexCommits.dataStore(spark, path).served()
         .groupBy(col("__u"))
         .agg(max(col("__exp")).as("__exp"), max(col("__conv")).as("__conv"))
       graft.ops.EventOps.abTestReadout(merged)
@@ -870,9 +868,7 @@ object EventStream {
     * rescanned.
     */
   def serveCmsStream(spark: SparkSession, path: String): DataFrame = {
-    val state = graft.core.IndexCommits.servedState(spark, path)
-    spark.read.parquet(s"$path/data")
-      .filter(col("batch").isin(state.batches: _*))
+    graft.core.IndexCommits.dataStore(spark, path).served()
       .groupBy(col("j"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
   }

@@ -2,6 +2,8 @@ package graft.core
 
 import graft.SparkSpec
 import graft.ops.Retrieval
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class IndexCommitsSpec extends SparkSpec {
   import spark.implicits._
@@ -68,5 +70,79 @@ class IndexCommitsSpec extends SparkSpec {
       assert(!f.exists(new org.apache.hadoop.fs.Path(path + "/tombstones/batch=1")))
       assert(!f.exists(new org.apache.hadoop.fs.Path(path + "/postings/batch=2")))
     }
+  }
+
+  private def tempStore(prefix: String, parts: IndexCommits.Part*) =
+    IndexCommits.Store(spark,
+      Files.createTempDirectory(prefix).toString, parts)
+
+  test("a reset stopped after its first delete serves an empty store, and " +
+      "the retried build serves the new corpus") {
+    val store = tempStore("graft_reset_order",
+      IndexCommits.Part("data", partitionBy = Some("k")), IndexCommits.Part("side"))
+    def build(ids: Seq[Long]): Unit = {
+      store.reset()
+      store.write(0L, ids.map(i => (i, i % 2)).toDF("id", "k"),
+        ids.map(i => (i, s"v$i")).toDF("id", "v"))
+    }
+    def served(part: String) = store.served(part = part, idCol = Some("id"))
+      .select("id").as[Long].collect().sorted.toSeq
+    build(Seq(1L, 2L, 3L))
+    store.delete(1L, Seq(2L).toDF("id"))
+    assert(served("data") == Seq(1L, 3L))
+    // the reset's first delete, and nothing after it: every marker is
+    // gone while every data directory is still there
+    val f = IndexCommits.fs(spark, store.path)
+    f.delete(new org.apache.hadoop.fs.Path(s"${store.path}/${store.resetOrder.head}"), true)
+    assert(store.snapshot() == IndexCommits.State(Seq.empty, Seq.empty))
+    assert(served("data").isEmpty && served("side").isEmpty)
+    build(Seq(7L, 8L))
+    assert(store.snapshot() == IndexCommits.State(Seq(0L), Seq.empty))
+    assert(served("data") == Seq(7L, 8L) && served("side") == Seq(7L, 8L))
+  }
+
+  test("empty-unit guard: compacting a fully-deleted store serves an empty " +
+      "result for a partitioned and an unpartitioned part") {
+    val store = tempStore("graft_empty_unit",
+      IndexCommits.Part("keyed", partitionBy = Some("bucket")),
+      IndexCommits.Part("flat"))
+    store.reset()
+    store.write(0L, Seq((1L, 0, 1.5), (2L, 3, 2.5)).toDF("id", "bucket", "x"),
+      Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
+    store.delete(1L, Seq(1L, 2L).toDF("id"))
+    store.compact(2L)(state => Seq(
+      store.served(state, "keyed", Some("id")).drop("batch"),
+      store.served(state, "flat", Some("id")).drop("batch")))
+    assert(store.vacuum() == 2) // batch_0 and del_1
+    assert(store.snapshot() == IndexCommits.State(Seq(2L), Seq.empty))
+    val keyed = store.served(part = "keyed")
+    val flat = store.served(part = "flat")
+    assert(keyed.collect().isEmpty && flat.collect().isEmpty)
+    assert(keyed.columns.toSet == Set("id", "x", "bucket", "batch"))
+    assert(flat.columns.toSet == Set("id", "s", "batch"))
+    // an append after the empty compaction serves beside it
+    store.write(3L, Seq((5L, 1, 0.5)).toDF("id", "bucket", "x"),
+      Seq((5L, "e")).toDF("id", "s"))
+    assert(store.served(part = "keyed").select("id").as[Long].collect().toSeq == Seq(5L))
+  }
+
+  test("the unit layout and marker writes live in IndexCommits.scala alone") {
+    // split so this file does not match its own search
+    val patterns = Seq("batch=" + "$", "/" + "commits",
+      "IndexCommits" + ".mark(", "commit" + "Compaction(")
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .toSeq
+    def hits(p: java.nio.file.Path) = {
+      val text = Files.readString(p)
+      patterns.filter(text.contains)
+    }
+    val (home, others) =
+      sources.partition(_.getFileName.toString == "IndexCommits.scala")
+    assert(home.nonEmpty && home.forall(hits(_).nonEmpty),
+      "the guard must see the layout in IndexCommits.scala itself")
+    val offenders = others.map(p => p -> hits(p)).filter(_._2.nonEmpty)
+    assert(offenders.isEmpty, "batch-unit layout outside IndexCommits: " +
+      offenders.map { case (p, h) => s"$p (${h.mkString(", ")})" }.mkString("; "))
   }
 }

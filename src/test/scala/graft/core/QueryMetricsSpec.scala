@@ -74,6 +74,10 @@ class QueryMetricsSpec extends SparkSpec {
       // the build-time stage names the graft operator that started it
       assert(m.slowest.exists(_.name.contains("graft.core.Broadcasts")),
         m.slowest.map(_.name).mkString("\n"))
+      // every stage names a graft frame, the ones AQE submits from its own
+      // thread pool too (named by their SQL execution's call site)
+      assert(m.slowest.nonEmpty && m.slowest.forall(_.name.contains(" | graft.")),
+        m.slowest.map(_.name).mkString("\n"))
       assert(m.json.contains(s""""build_jobs":${m.buildJobs},"""))
     }
   }
