@@ -166,28 +166,46 @@ object BpeTrain {
     merges.toSeq
   }
 
-  /** How many merge projections may stack before the word table is
-    * re-materialized (learn loop) or the encode dictionary is
-    * checkpointed (dict path) — bounds both lineage depth and the
-    * nested-replace expression depth.
-    */
+  /** Merges per materialized batch: bounds lineage and expression depth. */
   private val RetrackEvery = 16
 
   private def symInit(word: Column): Column =
     concat(lit(" "), concat_ws(" ", split(word, "")), lit(" "))
 
-  private def applyMerge(sym: Column, l: String, r: String): Column = {
-    val pat = lit(" " + l + " " + r + " ")
-    val rep = lit(" " + l + r + " ")
-    replace(replace(sym, pat, rep), pat, rep)
-  }
+  private def applyMerges(sym: Column, merges: Seq[(String, String)]): Column =
+    merges.foldLeft(sym) { case (s, (l, r)) =>
+      val pat = lit(" " + l + " " + r + " ")
+      val rep = lit(" " + l + r + " ")
+      replace(replace(s, pat, rep), pat, rep)
+    }
+
+  /** `words` plus `__sym`: each `__word`'s symbol string after `merges`
+    * in training order. Up to `chainLimit` merges apply as one literal
+    * replace chain — one narrow codegen'd projection, no shuffle, no UDF.
+    * A REAL merge table (10⁴-10⁵ entries) would nest 2·|merges| replace
+    * calls in one expression (quadratic analysis, codegen stack
+    * overflow), so a larger one applies in `RetrackEvery`-sized batches,
+    * one [[graft.core.Iterate]] round each, to a vocab-bounded `words`.
+    */
+  private def withSymbols(words: DataFrame, merges: Seq[(String, String)],
+                          chainLimit: Int): DataFrame =
+    if (merges.size <= chainLimit)
+      words.withColumn("__sym", applyMerges(symInit(col("__word")), merges))
+    else {
+      val batches = merges.grouped(RetrackEvery).toVector
+      graft.core.Iterate.rounds(
+          words.withColumn("__sym", symInit(col("__word"))), batches.size) {
+        (round, dict) =>
+          dict.withColumn("__sym", applyMerges(col("__sym"), batches(round - 1)))
+      }.state
+    }
 
   /** The learned vocabulary: every symbol left in the word table after
     * applying a merge sequence, with corpus-frequency-weighted counts —
     * the piece inventory a tokenizer ships (chars that never merged +
     * every merged piece). Runs on the vocab-bounded word-frequency
     * table: one corpus scan, then merges applied exactly as in
-    * [[encode]] (chain below `chainLimit`, checkpointed batches above).
+    * [[encode]].
     */
   def vocab(docs: DataFrame, textCol: String,
             merges: Seq[(String, String)],
@@ -196,18 +214,7 @@ object BpeTrain {
       .select(explode(
         filter(split(trim(col(textCol)), "\\s+"), w => w =!= "")).as("__word"))
       .groupBy("__word").agg(count(lit(1)).as("__freq"))
-    val dict =
-      if (merges.size <= chainLimit)
-        words.withColumn("__sym", merges.foldLeft(symInit(col("__word"))) {
-          case (s, (l, r)) => applyMerge(s, l, r)
-        })
-      else merges.grouped(RetrackEvery).foldLeft(
-        words.withColumn("__sym", symInit(col("__word")))) { (d, batch) =>
-        d.withColumn("__sym", batch.foldLeft(col("__sym")) {
-          case (s, (l, r)) => applyMerge(s, l, r)
-        }).localCheckpoint()
-      }
-    dict
+    withSymbols(words, merges, chainLimit)
       .select(explode(split(trim(col("__sym")), " ")).as("piece"),
         col("__freq"))
       .groupBy("piece").agg(sum("__freq").as("n"))
@@ -215,19 +222,11 @@ object BpeTrain {
 
   /** Re-tokenize text with a learned merge table, applying the merges in
     * training order to each word's symbol string and emitting the
-    * resulting pieces.
-    *
-    * Two plans behind one result: a merge table up to `chainLimit` is
-    * applied as a literal replace chain — one narrow codegen'd
-    * projection, no shuffle, no UDF. A REAL tokenizer's merge table
-    * (10⁴-10⁵ entries) would nest 2·|merges| replace calls in a single
-    * expression (quadratic analysis, codegen stack overflow), so larger
-    * tables go through the word DICTIONARY: distinct words (vocab-
-    * bounded at any corpus size) get the chain applied in
-    * `RetrackEvery`-sized batches with an eager localCheckpoint between
-    * batches (bounded expression depth, bounded lineage), and the
-    * pieces map joins back onto the exploded corpus — the standard
-    * build-once-apply-everywhere tokenizer shape.
+    * resulting pieces. Up to `chainLimit` merges the chain applies to
+    * the exploded corpus directly; above it, to the distinct words
+    * (vocab-bounded at any corpus size), and the pieces map joins back
+    * onto the exploded corpus — the standard build-once-apply-everywhere
+    * tokenizer shape.
     */
   def encode(docs: DataFrame, idCol: String, textCol: String,
              merges: Seq[(String, String)],
@@ -238,23 +237,12 @@ object BpeTrain {
         .as(Seq("word_pos", "__word")))
       .select(col(idCol), col("word_pos").cast("long").as("word_pos"),
         col("__word"))
-    if (merges.size <= chainLimit) {
-      val merged = merges.foldLeft(symInit(col("__word"))) {
-        case (s, (l, r)) => applyMerge(s, l, r)
-      }
-      toks.select(col(idCol), col("word_pos"),
-        split(trim(merged), " ").as("pieces"))
-    } else {
-      var dict = toks.select(col("__word")).distinct()
-        .withColumn("__sym", symInit(col("__word")))
-      merges.grouped(RetrackEvery).foreach { batch =>
-        dict = dict.withColumn("__sym", batch.foldLeft(col("__sym")) {
-          case (s, (l, r)) => applyMerge(s, l, r)
-        }).localCheckpoint() // eager: cut lineage + expression depth
-      }
-      toks.join(dict, "__word")
-        .select(col(idCol), col("word_pos"),
-          split(trim(col("__sym")), " ").as("pieces"))
-    }
+    val syms =
+      if (merges.size <= chainLimit) withSymbols(toks, merges, chainLimit)
+      else toks.join(
+        withSymbols(toks.select(col("__word")).distinct(), merges, chainLimit),
+        "__word")
+    syms.select(col(idCol), col("word_pos"),
+      split(trim(col("__sym")), " ").as("pieces"))
   }
 }

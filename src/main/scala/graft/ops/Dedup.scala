@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.IndexCommits
+import graft.core.{IndexCommits, Iterate}
 
 /** Deduplication operators for large-scale corpus curation (north-star
   * extensions): exact, MinHash-LSH, SimHash, n-gram Jaccard, and
@@ -918,10 +918,10 @@ object Dedup {
     *
     * Convergence is detected from `sum(label)` (decimal-exact): labels
     * only ever decrease elementwise, so ANY change strictly decreases the
-    * sum — one partial-aggregated scan of the new labels per round,
-    * instead of a join against the previous round. Intermediate label
-    * relations register in [[graft.core.Caches]] and are released by the
-    * harness after the terminal action.
+    * sum — an aggregate [[graft.core.Iterate]] observes inside each
+    * round's own checkpoint job, instead of a join against the previous
+    * round. At `maxIter` without a fixed point the last labeling is
+    * returned and a warning logged.
     *
     * @return (id, label) — label is the min id of the node's component.
     */
@@ -931,7 +931,7 @@ object Dedup {
 
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20): (DataFrame, Int) = {
+      maxIter: Int = 20): (DataFrame, Iterate.Result) = {
     // cache the edge list PRE-PARTITIONED on the per-round join key: the
     // cached InMemoryRelation advertises hashpartitioning(dst), so every
     // round's join shuffles only the (shrinking) labels side — the big
@@ -941,51 +941,41 @@ object Dedup {
         .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
         .distinct()
         .repartition(col("dst")))
-    var labels = graft.core.Caches.track(
+    val labels = graft.core.Caches.track(
       edges.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")))
-    var converged = false
-    var i = 0
     // decimal(38,0): exact at any node-id magnitude/graph size, where a
     // long sum could overflow on 100 TB-scale id spaces
-    var prevSum: java.math.BigDecimal = null
-    while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min("label").as("nbr_label"))
-      val prop = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("label"))
-      // pointer jumping: follow label -> label's own label (chains halve
-      // every round; labels only ever decrease so least() is safe).
-      // Skipped in round 0: shallow graphs (near-dup clusters, diameter
-      // 1-2) converge on plain propagation and shouldn't pay the extra
-      // self-join; deep graphs still get O(log diameter) from round 1 on.
-      // localCheckpoint (not persist): an iterated plan otherwise nests
-      // its whole history every round — the tree blows past the
-      // analyzer's recursion depth long before the data is big. Eager
-      // checkpoint materializes the round AND resets the plan to a flat
-      // LogicalRDD, so per-round plan cost is constant.
-      val jumped =
-        if (i == 0) prop
+    val res = Iterate.fixpoint(labels, maxIter,
+        Seq(sum(col("label").cast(DecimalType(38, 0))).as("s"))) {
+      (round, labels) =>
+        val nbrMin = edges
+          .join(labels.select(col("id").as("dst"), col("label")), "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min("label").as("nbr_label"))
+        val prop = labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("nbr_label"), col("label")))
+              .as("label"))
+        // pointer jumping: follow label -> label's own label (chains
+        // halve every round; labels only ever decrease so least() is
+        // safe). Skipped in round 1: shallow graphs (near-dup clusters,
+        // diameter 1-2) converge on plain propagation and shouldn't pay
+        // the extra self-join; deep graphs still get O(log diameter)
+        // from round 2 on.
+        if (round == 1) prop
         else prop.join(
             prop.select(col("id").as("label"), col("label").as("ll")),
             Seq("label"), "left")
           .select(col("id"),
             least(col("label"), coalesce(col("ll"), col("label")))
               .as("label"))
-      val next = jumped.localCheckpoint(true)
-      val sumNow = next
-        .agg(sum(col("label").cast(DecimalType(38, 0))).as("s"))
-        .head().getDecimal(0)
-      converged = prevSum != null && prevSum.compareTo(sumNow) == 0
-      prevSum = sumNow
-      labels = next
-      i += 1
     }
-    (labels, i)
+    if (!res.converged)
+      log.warn(s"connectedComponents: no convergence after ${res.rounds} " +
+        "rounds; emitting the last labeling (a label may not yet be its " +
+        "component's min id)")
+    (res.state, res)
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds
@@ -1029,7 +1019,7 @@ object Dedup {
 
   private[graft] def connectedComponentsStarWithRounds(
       pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25, strict: Boolean = false): (DataFrame, Int) = {
+      maxIter: Int = 25, strict: Boolean = false): (DataFrame, Iterate.Result) = {
     val nodes = graft.core.Caches.track(
       pairs.select(col(aCol).as("id"))
         .union(pairs.select(col(bCol).as("id"))).distinct())
@@ -1056,47 +1046,38 @@ object Dedup {
       reattached.union(self).distinct()
     }
 
-    var edges = pairs
+    val edges = Iterate.materialize(pairs
       .select(greatest(col(aCol), col(bCol)).as("hi"),
         least(col(aCol), col(bCol)).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(true)
-    var prevSig: Row = null
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxIter) {
-      // localCheckpoint: flat plan per round (see pointer-jumping notes)
-      val next = smallStar(largeStar(largeStar(edges))).localCheckpoint(true)
-      val sig = next.agg(count(lit(1)).as("n"),
-        sum(xxhash64(col("hi"), col("lo")).cast(DecimalType(38, 0))).as("h")).head()
-      converged = prevSig != null && prevSig == sig
-      prevSig = sig
-      edges = next
-      rounds += 1
+      .filter(col("hi") =!= col("lo")).distinct())
+    val res = Iterate.fixpoint(edges, maxIter,
+        Seq(count(lit(1)).as("n"),
+          sum(xxhash64(col("hi"), col("lo")).cast(DecimalType(38, 0))).as("h"))) {
+      (_, e) => smallStar(largeStar(largeStar(e)))
     }
     // Converged edge sets are disjoint stars (each hi appears once), so the
     // left join is 1:1. On maxIter exhaustion a node may still sit under
     // several hi edges — aggregate to min(label) so the output contract
     // (exactly one row per id) holds unconditionally instead of silently
     // multiplying rows.
-    val edgeLabels0 = edges.select(col("hi").as("id"), col("lo").as("label"))
+    val edgeLabels0 = res.state.select(col("hi").as("id"), col("lo").as("label"))
     val edgeLabels =
-      if (converged) edgeLabels0
+      if (res.converged) edgeLabels0
       else if (strict)
         throw new IllegalStateException(
-          s"connectedComponentsStar: no convergence after $rounds rounds " +
+          s"connectedComponentsStar: no convergence after ${res.rounds} rounds " +
             s"(maxIter=$maxIter); raise maxIter or drop strict=true to " +
             "accept a coarser-than-final (still valid) labeling")
       else {
         log.warn(
-          s"connectedComponentsStar: no convergence after $rounds rounds; " +
+          s"connectedComponentsStar: no convergence after ${res.rounds} rounds; " +
             "emitting min-label per node (valid but possibly coarser-than-final labeling)")
         edgeLabels0.groupBy("id").agg(min(col("label")).as("label"))
       }
     val labels = nodes
       .join(edgeLabels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    (labels, rounds)
+    (labels, res)
   }
 
   /** Incremental connected components: fold a NEW batch's candidate

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.core.Iterate
 
 /** Iterative graph analytics beyond connected components: PageRank
   * (Brin & Page 1998) over an edge list — here used as duplicate-cluster
@@ -39,48 +40,16 @@ object Graphs {
     * for every node with at least one edge.
     */
   def pageRank(pairs: DataFrame, aCol: String, bCol: String,
-               damping: Double = 0.85, iters: Int = 3): DataFrame = {
-    require(iters >= 1, "at least one power iteration")
-    // scale 14, NOT deeper: past ~15 significant decimals the
-    // double→decimal cast is engine-specific (Spark casts the shortest
-    // decimal representation, DuckDB the exact binary expansion), so a
-    // deeper scale BREAKS cross-engine equality instead of tightening
-    // it — 14 is the repo-wide dotExact/dotSql staging depth
-    val dec = DecimalType(38, 14)
-    // cache the symmetrized edges BEFORE deriving degrees: deg, n, the
-    // rank init and the per-round join all re-evaluate this plan, and
-    // without the cache each one re-runs the (possibly expensive)
-    // upstream pair generation — e.g. a MinHash banding join
-    val edges = graft.core.Caches.track(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct())
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // the static per-iteration join input: (src, dst, deg), cached
-    // pre-partitioned on src so only the rank side shuffles per round
-    val edgesDeg = graft.core.Caches.track(
-      edges.join(deg, "src").repartition(col("src")))
-    val n = graft.core.Caches.track(deg.agg(count(lit(1)).as("__n")))
-    def withN(df: DataFrame): DataFrame = df.crossJoin(broadcast(n))
-    var ranks = withN(deg.select(col("src").as("id")))
-      .select(col("id"), (lit(1.0) / col("__n")).as("r"))
-    for (_ <- 1 to iters) {
-      val contribs = edgesDeg
-        .join(ranks.select(col("id").as("src"), col("r")), "src")
-        .select(col("dst"), (col("r") / col("deg")).as("__c"))
-      // eager localCheckpoint per round (the connectedComponents
-      // discipline): without it AQE re-optimizes the whole nested
-      // iteration tree at every exchange of every round — measured ~1s
-      // of driver re-planning per iteration on a sub-second data volume
-      ranks = withN(contribs.groupBy(col("dst").as("id"))
-          .agg(sum(col("__c").cast(dec)).cast("double").as("__s")))
-        .select(col("id"),
+               damping: Double = 0.85, iters: Int = 3): DataFrame =
+    powerIteration(pairs, aCol, bCol, iters) { deg =>
+      val n = graft.core.Caches.track(deg.agg(count(lit(1)).as("__n")))
+      def withN(df: DataFrame): DataFrame = df.crossJoin(broadcast(n))
+      (withN(deg.select(col("src").as("id")))
+        .select(col("id"), (lit(1.0) / col("__n")).as("r")),
+        inflow => withN(inflow).select(col("id"),
           (lit(damping) * col("__s") + lit(1.0 - damping) / col("__n"))
-            .as("r"))
-        .localCheckpoint(true)
-    }
-    ranks.select(col("id"), col("r").as("pagerank")).orderBy(col("id"))
-  }
+            .as("r")))
+    }.select(col("id"), col("r").as("pagerank")).orderBy(col("id"))
 
   /** PERSONALIZED PageRank (Page et al. 1999 §6; the random surfer
     * teleports back to ONE seed node instead of anywhere): proximity of
@@ -97,9 +66,33 @@ object Graphs {
     */
   def personalizedPageRank(pairs: DataFrame, aCol: String, bCol: String,
                            seed: Long, damping: Double = 0.85,
-                           iters: Int = 3): DataFrame = {
+                           iters: Int = 3): DataFrame =
+    powerIteration(pairs, aCol, bCol, iters) { deg =>
+      (deg.select(col("src").as("id"),
+        when(col("src") === seed, lit(1.0)).otherwise(lit(0.0)).as("r")),
+        inflow => inflow.select(col("id"), (lit(damping) * col("__s") +
+          when(col("id") === seed, lit(1.0 - damping)).otherwise(lit(0.0)))
+          .as("r")))
+    }.select(col("id"), col("r").as("ppr")).orderBy(col("id"))
+
+  /** The power iteration behind [[pageRank]] and [[personalizedPageRank]]:
+    * `ranks` maps the degrees (src, deg) to the round-0 ranks (id, r) and
+    * to the update from a round's inflow (id, __s) to its ranks.
+    */
+  private def powerIteration(pairs: DataFrame, aCol: String, bCol: String,
+                             iters: Int)(
+      ranks: DataFrame => (DataFrame, DataFrame => DataFrame)): DataFrame = {
     require(iters >= 1, "at least one power iteration")
+    // scale 14, NOT deeper: past ~15 significant decimals the
+    // double→decimal cast is engine-specific (Spark casts the shortest
+    // decimal representation, DuckDB the exact binary expansion), so a
+    // deeper scale BREAKS cross-engine equality instead of tightening
+    // it — 14 is the repo-wide dotExact/dotSql staging depth
     val dec = DecimalType(38, 14)
+    // cache the symmetrized edges BEFORE deriving degrees: deg, the rank
+    // init and the per-round join all re-evaluate this plan, and
+    // without the cache each one re-runs the (possibly expensive)
+    // upstream pair generation — e.g. a MinHash banding join
     val edges = graft.core.Caches.track(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -107,21 +100,14 @@ object Graphs {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val edgesDeg = graft.core.Caches.track(
       edges.join(deg, "src").repartition(col("src")))
-    def teleport(id: Column): Column =
-      when(id === seed, lit(1.0 - damping)).otherwise(lit(0.0))
-    var ranks = deg.select(col("src").as("id"),
-      when(col("src") === seed, lit(1.0)).otherwise(lit(0.0)).as("r"))
-    for (_ <- 1 to iters) {
-      val contribs = edgesDeg
-        .join(ranks.select(col("id").as("src"), col("r")), "src")
+    val (init, update) = ranks(deg)
+    Iterate.rounds(init, iters) { (_, r) =>
+      update(edgesDeg
+        .join(r.select(col("id").as("src"), col("r")), "src")
         .select(col("dst"), (col("r") / col("deg")).as("__c"))
-      ranks = contribs.groupBy(col("dst").as("id"))
-        .agg(sum(col("__c").cast(dec)).cast("double").as("__s"))
-        .select(col("id"),
-          (lit(damping) * col("__s") + teleport(col("id"))).as("r"))
-        .localCheckpoint(true)
-    }
-    ranks.select(col("id"), col("r").as("ppr")).orderBy(col("id"))
+        .groupBy(col("dst").as("id"))
+        .agg(sum(col("__c").cast(dec)).cast("double").as("__s")))
+    }.state
   }
 
   /** Per-vertex triangle counts + local clustering coefficient over the
@@ -312,24 +298,19 @@ object Graphs {
   private def lpaOnEdges(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "at least one propagation round")
     val edgesP = graft.core.Caches.track(edges.repartition(col("src")))
-    var labels = edges.select(col("src").as("id")).distinct()
+    val init = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
     val pick = Window.partitionBy(col("id"))
       .orderBy(col("cnt").desc, col("lbl").asc)
-    for (_ <- 1 to iters) {
-      // eager localCheckpoint per round — the connectedComponents/
-      // pageRank discipline: truncate lineage so AQE re-plans one
-      // round, not the whole nested iteration tree
-      labels = edgesP
+    Iterate.rounds(init, iters) { (_, labels) =>
+      edgesP
         .join(labels.select(col("id").as("src"), col("lbl")), "src")
         .groupBy(col("dst").as("id"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
         .withColumn("__rn", row_number().over(pick))
         .filter(col("__rn") === 1)
         .select(col("id"), col("lbl"))
-        .localCheckpoint(true)
-    }
-    labels.select(col("id"), col("lbl").as("community"))
+    }.state.select(col("id"), col("lbl").as("community"))
   }
 
   /** Per-community MODULARITY decomposition (Newman & Girvan 2004) of
@@ -458,9 +439,9 @@ object Graphs {
     * `maxRounds` rather than return a non-fixpoint — so an oracle that
     * unrolls exactly `maxRounds` rounds (extra rounds past the
     * fixpoint are no-ops: peeling is monotone) is guaranteed to match.
-    * The driver-side per-round count that detects the fixpoint doubles
-    * as the early exit, so the bench pays actual rounds, not the
-    * worst-case bound.
+    * The per-round node count that detects the fixpoint is observed
+    * inside each round's checkpoint job and doubles as the early exit,
+    * so the bench pays actual rounds, not the worst-case bound.
     *
     * Scale shape, per round: the cached symmetrized edge list
     * semi-joined to the shrinking node set on BOTH endpoints, then one
@@ -468,58 +449,33 @@ object Graphs {
     * the node relation only ever shrinks.
     */
   def kCore(pairs: DataFrame, aCol: String, bCol: String, k: Int,
-            maxRounds: Int = 16,
-            onRounds: Int => Unit = _ => ()): DataFrame = {
+            maxRounds: Int = 16): DataFrame =
+    kCoreWithRounds(pairs, aCol, bCol, k, maxRounds)._1
+
+  private[graft] def kCoreWithRounds(
+      pairs: DataFrame, aCol: String, bCol: String, k: Int,
+      maxRounds: Int = 16): (DataFrame, Iterate.Result) = {
     require(k >= 1, "k-core needs k >= 1")
     val edges = symEdges(pairs, aCol, bCol)
-    def peel(ns: DataFrame): DataFrame =
-      edges
-        .join(ns.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(ns.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("core_degree"))
-        .filter(col("core_degree") >= k)
-    var nodes = edges.select(col("src").as("id")).distinct()
-    var prevCount = nodes.count()
-    var out = peel(nodes).localCheckpoint(true)
-    var rounds = 1
-    var curCount = out.count()
-    while (curCount != prevCount && rounds < maxRounds) {
-      // strictly fewer nodes survived: peel again from the new set
-      nodes = out.select(col("id"))
-      prevCount = curCount
-      out = peel(nodes).localCheckpoint(true)
-      curCount = out.count()
-      rounds += 1
+    val size = Seq(count(lit(1)).as("n"))
+    val (nodes, seedSize) =
+      Iterate.measure(edges.select(col("src").as("id")).distinct(), size)
+    val res = Iterate.fixpoint(nodes, maxRounds, size, Some(seedSize)) {
+      (_, ns) =>
+        edges
+          .join(ns.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(ns.select(col("id").as("dst")), Seq("dst"), "left_semi")
+          .groupBy(col("src").as("id"))
+          .agg(count(lit(1)).as("core_degree"))
+          .filter(col("core_degree") >= k)
     }
-    require(curCount == prevCount,
+    require(res.converged,
       s"k-core peeling did not reach a fixpoint within $maxRounds rounds " +
         "(raise maxRounds — a returned non-fixpoint would silently " +
         "disagree with the unrolled oracle)")
-    // peeling runs eagerly above, so the actual round count is known
-    // here — reported for probes/telemetry (rounds, not just wall, is
-    // the k-core growth term worth watching at scale)
-    onRounds(rounds)
-    out.orderBy(col("id"))
+    (res.state.orderBy(col("id")), res)
   }
 
-  /** Multi-source BFS from the `numSeeds` smallest node ids — landmark
-    * hop distances: each node's distance to (and identity of) its
-    * nearest landmark under the (dist, seed-id) total order. The
-    * graph-partition assignment every landmark-routing / graph-sketch
-    * scheme starts from, and on the near-dup graph a cheap "how far is
-    * this doc from a canonical exemplar" signal. Hop-bounded: nodes
-    * beyond `maxHops` of every landmark are absent from the result (an
-    * explicit contract, not an accident — frontier expansion is the
-    * cost model, and curation wants the near neighborhood).
-    *
-    * Determinism: relaxation keeps the lexicographically smallest
-    * (dist, seed) per node; seeds are the smallest node ids (a
-    * driver-bounded orderBy/limit over the node relation, broadcast
-    * from there). Per round: one join of the cached pre-partitioned
-    * edge list against the frontier-carrying state, one per-node
-    * row_number — node-keyed exchanges only.
-    */
   /** DeepWalk-style walk-corpus generation (Perozzi, Al-Rfou & Skiena
     * 2014) with a DETERMINISTIC walker: one walk per node, `length`
     * steps, where the step-k successor of a walk is the neighbor with
@@ -536,8 +492,8 @@ object Graphs {
     * edge list caches pre-partitioned on `src` ONCE; each of the
     * `length` steps joins the walks-sized frontier against it and picks
     * the argmin with `min_by` (partial-aggregated before the exchange —
-    * the per-walk state that moves is one row), `localCheckpoint`
-    * keeping round plans flat. Total cost: `length` bounded exchanges,
+    * the per-walk state that moves is one row), each step materialized
+    * by [[graft.core.Iterate]]. Total cost: `length` bounded exchanges,
     * output walks×(length+1) rows — never degree-squared, nothing
     * collected. Walks stay inside their connected component by
     * construction; a symmetrized graph has no dead ends.
@@ -546,28 +502,37 @@ object Graphs {
     *         start), steps 1..length the visited successors.
     */
   def deterministicWalks(pairs: DataFrame, aCol: String, bCol: String,
-                         length: Int): DataFrame = {
-    require(length >= 1, "at least one step")
-    val edges = symEdges(pairs, aCol, bCol)
-    val edgesP = graft.core.Caches.track(edges.repartition(col("src")))
-    var frontier = edges.select(col("src").as("walk_id")).distinct()
-      .select(col("walk_id"), col("walk_id").as("node"))
-      .localCheckpoint(true)
-    var out = frontier.select(col("walk_id"), lit(0L).as("step"),
-      col("node"))
-    for (k <- 1 to length) {
-      frontier = frontier
+                         length: Int): DataFrame =
+    walks(pairs, aCol, bCol, length) { (k, frontier, edgesP) =>
+      frontier
         .join(edgesP.withColumnRenamed("src", "node"), "node")
         .groupBy(col("walk_id"))
         .agg(min_by(col("dst"),
           md5(concat_ws(":", col("walk_id"), lit(k), col("dst"))))
           .as("node"))
-        .localCheckpoint(true)
-      out = out.unionByName(
-        frontier.select(col("walk_id"), lit(k.toLong).as("step"),
-          col("node")))
     }
-    out.orderBy(col("walk_id"), col("step"))
+
+  /** One walk per node: step k maps the (walk_id, prev, node) frontier
+    * through `step(k, frontier, edgesP)`; returns every step's
+    * (walk_id, step, node), step 0 the start node.
+    */
+  private def walks(pairs: DataFrame, aCol: String, bCol: String,
+                    length: Int)(
+      step: (Int, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    require(length >= 1, "at least one step")
+    val edges = symEdges(pairs, aCol, bCol)
+    val edgesP = graft.core.Caches.track(edges.repartition(col("src")))
+    val start = Iterate.materialize(
+      edges.select(col("src").as("walk_id")).distinct()
+        .select(col("walk_id"), col("walk_id").as("prev"),
+          col("walk_id").as("node")))
+    val walk = Iterate.rounds(start, length)((k, f) => step(k, f, edgesP))
+    (start +: walk.states).zipWithIndex
+      .map { case (f, k) =>
+        f.select(col("walk_id"), lit(k.toLong).as("step"), col("node"))
+      }
+      .reduce(_.unionByName(_))
+      .orderBy(col("walk_id"), col("step"))
   }
 
   /** node2vec-biased walks (Grover & Leskovec 2016) with the
@@ -597,24 +562,15 @@ object Graphs {
   def biasedWalks(pairs: DataFrame, aCol: String, bCol: String,
                   length: Int, p: Double = 2.0,
                   q: Double = 0.5): DataFrame = {
-    require(length >= 1, "at least one step")
     require(p > 0 && q > 0, "positive p and q")
-    val edges = symEdges(pairs, aCol, bCol)
-    val edgesP = graft.core.Caches.track(edges.repartition(col("src")))
-    var frontier = edges.select(col("src").as("walk_id")).distinct()
-      .select(col("walk_id"), col("walk_id").as("prev"),
-        col("walk_id").as("node"))
-      .localCheckpoint(true)
-    var out = frontier.select(col("walk_id"), lit(0L).as("step"),
-      col("node"))
-    for (k <- 1 to length) {
+    walks(pairs, aCol, bCol, length) { (k, frontier, edgesP) =>
       val cand = frontier
         .join(edgesP.withColumnRenamed("src", "node"), "node")
         .join(edgesP.select(col("src").as("__p2"), col("dst").as("__t"),
             lit(1).as("__tri")),
           col("prev") === col("__p2") && col("dst") === col("__t"),
           "left_outer")
-      frontier = cand
+      cand
         .withColumn("__w",
           when(col("dst") === col("prev"), lit(1.0 / p))
             .when(col("__tri").isNotNull, lit(1.0))
@@ -627,14 +583,26 @@ object Graphs {
         .agg(max_by(col("dst"), col("__w") / col("__u")).as("__next"))
         .select(col("walk_id"), col("node").as("prev"),
           col("__next").as("node"))
-        .localCheckpoint(true)
-      out = out.unionByName(
-        frontier.select(col("walk_id"), lit(k.toLong).as("step"),
-          col("node")))
     }
-    out.orderBy(col("walk_id"), col("step"))
   }
 
+  /** Multi-source BFS from the `numSeeds` smallest node ids — landmark
+    * hop distances: each node's distance to (and identity of) its
+    * nearest landmark under the (dist, seed-id) total order. The
+    * graph-partition assignment every landmark-routing / graph-sketch
+    * scheme starts from, and on the near-dup graph a cheap "how far is
+    * this doc from a canonical exemplar" signal. Hop-bounded: nodes
+    * beyond `maxHops` of every landmark are absent from the result (an
+    * explicit contract, not an accident — frontier expansion is the
+    * cost model, and curation wants the near neighborhood).
+    *
+    * Determinism: relaxation keeps the lexicographically smallest
+    * (dist, seed) per node; seeds are the smallest node ids (a
+    * driver-bounded orderBy/limit over the node relation, broadcast
+    * from there). Per round: one join of the cached pre-partitioned
+    * edge list against the frontier-carrying state, one per-node
+    * row_number — node-keyed exchanges only.
+    */
   def bfsLandmarks(pairs: DataFrame, aCol: String, bCol: String,
                    numSeeds: Int = 3, maxHops: Int = 4): DataFrame = {
     require(numSeeds >= 1 && maxHops >= 1, "need seeds and hops")
@@ -642,22 +610,20 @@ object Graphs {
     val edgesP = graft.core.Caches.track(edges.repartition(col("src")))
     val seeds = edges.select(col("src").as("id")).distinct()
       .orderBy(col("id")).limit(numSeeds)
-    var state = seeds.select(col("id"), lit(0L).as("dist"),
+    val init = seeds.select(col("id"), lit(0L).as("dist"),
       col("id").as("seed"))
     val pick = Window.partitionBy(col("id"))
       .orderBy(col("dist").asc, col("seed").asc)
-    for (_ <- 1 to maxHops) {
+    Iterate.rounds(init, maxHops) { (_, state) =>
       val prop = edgesP
         .join(state.select(col("id").as("src"), col("dist"), col("seed")),
           "src")
         .select(col("dst").as("id"), (col("dist") + 1L).as("dist"),
           col("seed"))
-      state = state.union(prop)
+      state.union(prop)
         .withColumn("__rn", row_number().over(pick))
         .filter(col("__rn") === 1)
         .select(col("id"), col("dist"), col("seed"))
-        .localCheckpoint(true)
-    }
-    state.orderBy(col("id"))
+    }.state.orderBy(col("id"))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.IndexCommits
+import graft.core.{IndexCommits, Iterate}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (north-star extension): brute-force cosine top-k as the exact baseline,
@@ -470,8 +470,8 @@ object Similarity {
     * narrow distance map against the single newest center (k·dims
     * literals ride into codegen; no join) plus a TakeOrdered(1) argmax
     * (per-partition max then a driver merge of partition-count rows —
-    * no global sort), and the state is localCheckpoint'ed so round
-    * plans stay flat. Total cost k scans — the textbook lower bound
+    * no global sort), and [[graft.core.Iterate]] materializes the state
+    * so round plans stay flat. Total cost k scans — the textbook lower bound
     * for exact greedy k-center — vs the naive rebuild-dmin-per-round
     * k² scans. Selected centers are k driver rows by construction.
     *
@@ -490,22 +490,21 @@ object Similarity {
     val firstId = base.agg(min(col("id"))).head().getLong(0)
     val selected = scala.collection.mutable.ArrayBuffer(
       (1L, firstId, 0.0))
-    var state = graft.core.Caches.track(
-      base.withColumn("dm",
-        sqDistExact(col("v"),
-          vectorOf(emb, idCol, vecCol, firstId).map(_.toDouble)))
-        .localCheckpoint(true))
-    for (round <- 2 to k) {
+    def pickFarthest(state: DataFrame): Long = {
       val far = state.select(col("id"), col("dm"))
         .orderBy(col("dm").desc, col("id").asc).limit(1).head()
-      selected += ((round.toLong, far.getLong(0), far.getDouble(1)))
-      if (round < k) {
-        val cvec = vectorOf(emb, idCol, vecCol, far.getLong(0)).map(_.toDouble)
-        state = graft.core.Caches.track(
-          state.withColumn("dm", least(col("dm"), sqDistExact(col("v"), cvec)))
-            .localCheckpoint(true))
-      }
+      selected += ((selected.size + 1L, far.getLong(0), far.getDouble(1)))
+      far.getLong(0)
     }
+    def centerDist(id: Long): Column =
+      sqDistExact(col("v"), vectorOf(emb, idCol, vecCol, id).map(_.toDouble))
+    val init = Iterate.materialize(base.withColumn("dm", centerDist(firstId)))
+    // round r picks center r+1 and folds its distance into dm; the
+    // last center needs no fold
+    val last = Iterate.rounds(init, k - 2) { (_, state) =>
+      state.withColumn("dm", least(col("dm"), centerDist(pickFarthest(state))))
+    }.state
+    if (k >= 2) pickFarthest(last)
     spark.createDataFrame(selected.toSeq)
       .toDF("round", "center_id", "radius")
   }
@@ -2403,20 +2402,18 @@ object Similarity {
     val entries = emb.withColumn("__rn", row_number().over(rnW))
       .filter(col("__rn") === 1)
       .select(col(idCol).as("__id"))
-    var beamDf = scored(entries)
+    val init = scored(entries)
       .orderBy(col("__cos").desc, col("__id"))
       .limit(beam)
-    for (_ <- 1 to hops) {
+    Iterate.rounds(init, hops) { (_, beamDf) =>
       val cand = beamDf.select(col("__id"))
         .union(g.join(beamDf.select(col("__id").as("src")), "src")
           .select(col("dst").as("__id")))
         .distinct()
-      beamDf = scored(cand)
+      scored(cand)
         .orderBy(col("__cos").desc, col("__id"))
         .limit(beam)
-        .localCheckpoint(true)
-    }
-    beamDf
+    }.state
       .select(col("__id").as(idCol), col("__cos").as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)

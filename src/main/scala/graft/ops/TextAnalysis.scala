@@ -261,8 +261,8 @@ object TextAnalysis {
     * is Σ_doc (windows_doc)², bounded by the document-length contract
     * (windows ∝ doc length / windowWords), never corpus-quadratic;
     * every exchange is doc-keyed, per-round contributions partial-
-    * aggregate before the exchange, per-round localCheckpoint
-    * truncates the iteration lineage.
+    * aggregate before the exchange, and [[graft.core.Iterate]]
+    * materializes each round.
     */
   def textRankWindows(docs: DataFrame, idCol: String, textCol: String,
                       windowWords: Int = 8, damping: Double = 0.85,
@@ -300,22 +300,21 @@ object TextAnalysis {
       .agg(sum(col("wt")).as("wj"))
     val peW = graft.core.Caches.track(pe.join(wj, Seq("doc_id", "src")))
     val nodes = ch.select(col("doc_id"), col("widx")).join(nDf, "doc_id")
-    var r = nodes.select(col("doc_id"), col("widx"),
+    val init = nodes.select(col("doc_id"), col("widx"),
       (lit(1.0) / col("nw")).as("r"))
-    for (_ <- 1 to iters) {
+    val r = graft.core.Iterate.rounds(init, iters) { (_, r) =>
       val contrib = peW
         .join(r.select(col("doc_id"), col("widx").as("src"), col("r")),
           Seq("doc_id", "src"))
         .groupBy(col("doc_id"), col("dst").as("widx"))
         .agg(sum((col("r") * col("wt") / col("wj")).cast(dec))
           .cast("double").as("sc"))
-      r = nodes
+      nodes
         .join(contrib, Seq("doc_id", "widx"), "left")
         .select(col("doc_id"), col("widx"),
           (lit(damping) * coalesce(col("sc"), lit(0.0)) +
             (lit(1.0) - lit(damping)) / col("nw")).as("r"))
-        .localCheckpoint(true)
-    }
+    }.state
     val pick = Window.partitionBy(col("doc_id"))
       .orderBy(col("r").desc, col("widx").asc)
     r.join(ch.select(col("doc_id"), col("widx"), col("window_text")),

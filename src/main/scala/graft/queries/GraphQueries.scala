@@ -215,7 +215,7 @@ object GraphQueries {
         "separating genuinely dense duplicate families from the " +
         "incidental pair/chain edges the banding df-cap emits. " +
         "Convergence contract mirrors connectedComponents: peel with a " +
-        "driver-side per-round fixpoint check (early exit — the bench " +
+        "per-round fixpoint check (early exit — the bench " +
         "pays actual rounds), hard-fail past 16 rounds rather than " +
         "return a non-fixpoint, so the oracle's exactly-16-round unroll " +
         "(no-op rounds past the fixpoint: peeling is monotone) is " +

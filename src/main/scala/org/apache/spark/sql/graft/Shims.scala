@@ -110,7 +110,7 @@ object Shims {
 
   /** RDD ids of the `LogicalRDD` leaves of a Dataset's analyzed plan
     * (`LogicalRDD` is `private[sql]`). For a Dataset returned by
-    * `localCheckpoint()` this is exactly the persisted checkpoint RDD —
+    * an eager local checkpoint this is exactly the persisted checkpoint RDD —
     * letting callers measure and release THAT RDD's blocks precisely,
     * instead of diffing `getPersistentRDDs` around the call (which
     * mis-attributes anything another thread persists concurrently, and

@@ -397,10 +397,11 @@ class DedupSpec extends SparkSpec {
         (2000L, 2001L), // pair
         (3000L, 3001L), (3000L, 3002L), (3000L, 3003L))) // star
       .toDF("id_a", "id_b")
-    val (starLabels, starRounds) =
+    val (starLabels, starLoop) =
       Dedup.connectedComponentsStarWithRounds(edges, "id_a", "id_b")
-    val (pjLabels, pjRounds) =
+    val (pjLabels, pjLoop) =
       Dedup.connectedComponentsWithRounds(edges, "id_a", "id_b", maxIter = 30)
+    val (starRounds, pjRounds) = (starLoop.rounds, pjLoop.rounds)
     val star = starLabels.orderBy("id").as[(Long, Long)].collect().toSeq
     assert(star == pjLabels.orderBy("id").as[(Long, Long)].collect().toSeq)
     // component minima are the labels
@@ -431,6 +432,26 @@ class DedupSpec extends SparkSpec {
     val ok = Dedup.connectedComponentsStar(pair, "id_a", "id_b",
       maxIter = 5, strict = true).as[(Long, Long)].collect().toSeq
     assert(ok.sortBy(_._1) == Seq(7L -> 7L, 9L -> 7L))
+  }
+
+  test("connectedComponents at its round cap reports converged = false " +
+    "and still emits one row per id") {
+    // a 64-node chain needs several pointer-jumping rounds; one is not enough
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val (labels, loop) =
+      Dedup.connectedComponentsWithRounds(chain, "id_a", "id_b", maxIter = 1)
+    assert(loop.rounds == 1 && !loop.converged)
+    val rows = labels.as[(Long, Long)].collect().toSeq
+    assert(rows.length == 64 && rows.map(_._1).distinct.length == 64)
+    assert(rows.forall(p => p._2 <= p._1))
+    // the same chain converges under the default cap
+    val (_, full) = Dedup.connectedComponentsWithRounds(chain, "id_a", "id_b")
+    assert(full.converged && full.rounds > 1)
+    // an empty edge list is a fixed point at once (equal null sums), not
+    // a run to the cap
+    val (none, empty) = Dedup.connectedComponentsWithRounds(
+      chain.filter(lit(false)), "id_a", "id_b")
+    assert(empty.converged && empty.rounds == 2 && none.count() == 0)
   }
 
   test("connectedComponents: chain, triangle, pair each collapse to min id") {

@@ -119,10 +119,13 @@ class GraphsSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L),
         (5L, 6L))
       .toDF("a", "b")
-    val r = Graphs.kCore(pairs, "a", "b", k = 2, maxRounds = 16)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    val (core, loop) = Graphs.kCoreWithRounds(pairs, "a", "b", k = 2,
+      maxRounds = 16)
+    val r = core.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r == Map(1L -> 2L, 2L -> 2L, 3L -> 2L),
       s"2-core is exactly the triangle with in-core degree 2: $r")
+    // three shrinking rounds, then the round that removes nothing
+    assert(loop.rounds == 4 && loop.converged, loop)
   }
 
   test("kCore: k above the densest degree yields an empty core; " +

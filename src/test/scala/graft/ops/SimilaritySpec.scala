@@ -1064,6 +1064,23 @@ class SimilaritySpec extends SparkSpec {
     assert(got == Seq(5L, 7L), s"tie must pick the smaller id: $got")
   }
 
+  test("kCenterSelect keeps each round's state in its checkpoint only " +
+      "(nothing tracked in Caches) over several rounds") {
+    // points at x = 0, 1, 4, 9, 16, 25
+    val emb = (0L until 6L).map(i => (i, Seq((i * i).toFloat, 0.0f)))
+      .toDF("vec_id", "embedding")
+    graft.core.Caches.releaseAll()
+    val got = Similarity.kCenterSelect(emb, "vec_id", "embedding", k = 4)
+      .orderBy("round").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    // 25 is farthest from 0; then 9 and 16 tie at 81 (smaller id wins);
+    // then 16, at 49 from 9
+    assert(got == Seq((1L, 0L, 0.0), (2L, 5L, 625.0), (3L, 3L, 81.0),
+      (4L, 4L, 49.0)), s"selection mismatch: $got")
+    assert(graft.core.Caches.releaseAll() == 0,
+      "a checkpointed round must not be persisted a second time")
+  }
+
   test("graphAnn layout: probe == in-memory serve; append freezes " +
       "batch-0 edges; unmarked batch stays invisible") {
     val emb = graft.core.Tables.embeddings(spark, graft.SparkSpec.Sf0001)
