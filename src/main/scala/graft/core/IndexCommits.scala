@@ -130,10 +130,10 @@ object IndexCommits {
       * a served tombstone names are anti-joined away. */
     def served(state: State = snapshot(), part: String = parts.head.name,
                idCol: Option[String] = None): DataFrame = {
-      val base = spark.read.parquet(s"$path/$part")
+      val base = Tables.parquet(spark, s"$path/$part")
         .filter(col("batch").isin(state.batches: _*))
-      // opening a parquet path runs its schema inference: read the
-      // tombstones only when they are anti-joined
+      // an open whose listing changed since the last one infers its
+      // schema in a job: open the tombstones only when they are anti-joined
       idCol.flatMap(c => tombstones(state)
           .map(t => base.join(t.select(col(c)), Seq(c), "left_anti")))
         .getOrElse(base)
@@ -144,12 +144,12 @@ object IndexCommits {
       * repeat across delete units. */
     def tombstones(state: State): Option[DataFrame] =
       if (state.deletes.isEmpty) None
-      else Some(spark.read.parquet(s"$path/$Tombstones")
+      else Some(Tables.parquet(spark, s"$path/$Tombstones")
         .filter(col("batch").isin(state.deletes: _*)))
 
     /** The rows of unit `id` of `part` alone, without the `batch` column. */
     def unit(id: Long, part: String = parts.head.name): DataFrame =
-      spark.read.parquet(dir(part, id))
+      Tables.parquet(spark, dir(part, id))
 
     private def writeUnit(id: Long, frames: Seq[DataFrame]): Unit = {
       require(frames.length == parts.length,

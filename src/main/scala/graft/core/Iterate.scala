@@ -48,21 +48,42 @@ object Iterate {
     */
   def fixpoint(init: DataFrame, maxRounds: Int, metric: Seq[Column],
                initMetric: Option[Map[String, Any]] = None)(
-      step: (Int, DataFrame) => DataFrame): Result = {
+      step: (Int, DataFrame) => DataFrame): Result =
+    loop(init, maxRounds, metric, initMetric, untilRepeat = true)(
+      (r, s, _) => step(r, s))._1
+
+  /** Exactly `n` rounds, each observing `metric` on the round it
+    * materializes, with no fixed-point test: round r materializes
+    * `step(state, metric)` of round r-1, and round 1 gets `init` and
+    * `initMetric` (from [[measure]]). Returns the last round's metric
+    * (`initMetric` after 0 rounds) beside the result.
+    */
+  def carry(init: DataFrame, initMetric: Map[String, Any], n: Int,
+            metric: Seq[Column])(
+      step: (DataFrame, Map[String, Any]) => DataFrame): (Result, Map[String, Any]) = {
+    val (result, last) = loop(init, n, metric, Some(initMetric), untilRepeat = false)(
+      (_, s, m) => step(s, m.get))
+    (result, last.get)
+  }
+
+  private def loop(init: DataFrame, maxRounds: Int, metric: Seq[Column],
+                   initMetric: Option[Map[String, Any]], untilRepeat: Boolean)(
+      step: (Int, DataFrame, Option[Map[String, Any]]) => DataFrame)
+      : (Result, Option[Map[String, Any]]) = {
     var (state, prev, converged, round) = (init, initMetric, false, 0)
     val states = Vector.newBuilder[DataFrame]
     while (!converged && round < maxRounds) {
       round += 1
-      val next = step(round, state)
+      val next = step(round, state, prev)
       if (metric.isEmpty) state = materialize(next)
       else {
         val (out, m) = measure(next, metric)
-        converged = prev.contains(m)
+        converged = untilRepeat && prev.contains(m)
         prev = Some(m)
         state = out
       }
       states += state
     }
-    Result(state, round, converged, states.result())
+    (Result(state, round, converged, states.result()), prev)
   }
 }

@@ -1,23 +1,119 @@
 package graft.core
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.types.StructType
 
-/** Fixture-table readers (see /root/repo/TESTDATA.md, FIXTURES.md §A).
+/** Fixture-table readers (see TESTDATA.md, FIXTURES.md §A) and the one
+  * parquet open of `src/main`.
   *
-  * All reads are plain `spark.read.parquet` so Catalyst keeps full pushdown
-  * freedom (column pruning + predicate pushdown reach the parquet scan).
-  * The reference system materialized every inter-stage table in Postgres
-  * (reference: diagnostic_group_pipeline_with_api.py:142,219) — here a table
-  * is just a lazily-planned scan and stages compose as DataFrame lineage.
+  * A table is a lazily planned scan, so Catalyst keeps full pushdown
+  * freedom (column pruning and predicate pushdown reach the parquet scan)
+  * and stages compose as DataFrame lineage. The reference system
+  * materialized every inter-stage table in Postgres (reference:
+  * diagnostic_group_pipeline_with_api.py:142,219).
+  *
+  * Every parquet read goes through [[parquet]], which memoizes the schema
+  * Spark infers. Opening a path without a schema runs a one-task Spark
+  * job (the footer read of parquet schema inference) before the query
+  * exists; an open with the schema given plans the same relation and
+  * starts no job. The memo contract:
+  *
+  *  - a path's fingerprint is its leaf-file listing (each file's path,
+  *    length and modification time, one driver-side listing) plus the
+  *    session's values of the confs that change parquet inference
+  *    ([[InferenceConfs]]);
+  *  - an open whose fingerprint equals the recorded one is given the
+  *    recorded schema; any other open (first open, a file added, removed
+  *    or rewritten, a conf changed) is a miss: Spark infers the schema as
+  *    a plain `spark.read.parquet` does, and the result replaces the entry;
+  *  - the memo holds one entry per qualified path, so a store rewritten at
+  *    every lifecycle step keeps one entry, not one per version;
+  *  - a missing path, or one that lists no file, is never recorded: it is
+  *    opened plainly and fails as Spark fails it.
+  *
+  * Spark's inference is the only inference: no footer is read here and no
+  * schema is written down (the `events.ts` type varies across data
+  * generations, see [[events]]). The listing is taken before the miss's
+  * read, so a file that changes between the two is caught by the next
+  * open's listing.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Session confs whose values change the schema Spark infers for the
+    * same files. */
+  private val InferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  private final case class Fingerprint(files: Vector[(String, Long, Long)],
+                                       confs: Seq[Option[String]])
+  private final case class Memo(fingerprint: Fingerprint, schema: StructType)
+
+  /** qualified path → the schema Spark inferred for it and the
+    * fingerprint it was inferred at */
+  private val schemas = new ConcurrentHashMap[String, Memo]()
+
+  /** Open the parquet file or directory at `path` (see the memo contract
+    * above). */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((key, fp)) =>
+        Option(schemas.get(key)).filter(_.fingerprint == fp) match {
+          case Some(m) => spark.read.schema(m.schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, Memo(fp, df.schema))
+            df
+        }
+    }
+
+  /** The qualified paths at or under `root` that the memo holds an entry
+    * for (a spec's view). */
+  private[core] def memoKeys(spark: SparkSession, root: String): Seq[String] = {
+    val q = qualify(spark, root).toString
+    schemas.keySet.toArray(Array.empty[String]).toSeq
+      .filter(k => k == q || k.startsWith(q + "/")).sorted
+  }
+
+  private def qualify(spark: SparkSession, path: String): Path = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
+
+  /** The qualified path and its fingerprint; None when nothing is listed
+    * there. */
+  private def fingerprint(spark: SparkSession,
+                          path: String): Option[(String, Fingerprint)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(p)
+    val files =
+      try {
+        val it = fs.listFiles(root, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector
+      } catch { case _: FileNotFoundException => Vector.empty }
+    if (files.isEmpty) None
+    else Some(root.toString ->
+      Fingerprint(files, InferenceConfs.map(spark.conf.getOption)))
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    fanout(spark, spark.read.parquet(s"$sfDir/$name.parquet"))
+    fanout(spark, parquet(spark, s"$sfDir/$name.parquet"))
 
   /** Scan-parallelism floor for LOW-SPLIT inputs (optimization guide
     * §2.2/§6): parquet parallelism is bounded by file splits (and,

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.core.Tables
+
 /** Data-layout operators — the write-side half of 100 TB performance.
   * Scans can only prune what the layout exposes: directory partitions
   * ([[Sinks.parquetPartitioned]]), bucket files ([[Sinks.bucketedTable]]),
@@ -33,7 +35,7 @@ object Layout {
     require(inPath != outPath, "compaction cannot overwrite its own input")
     val bytes = sizeOnDisk(spark, inPath)
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read.parquet(inPath)
+    Tables.parquet(spark, inPath)
       .repartition(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
   }

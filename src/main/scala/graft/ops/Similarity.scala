@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.{IndexCommits, Iterate}
+import graft.core.{IndexCommits, Iterate, Tables}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (north-star extension): brute-force cosine top-k as the exact baseline,
@@ -468,12 +468,14 @@ object Similarity {
     * Scale shape: the state is (id, vector, dmin) where dmin is the
     * RUNNING min distance to the chosen centers — each round pays ONE
     * narrow distance map against the single newest center (k·dims
-    * literals ride into codegen; no join) plus a TakeOrdered(1) argmax
-    * (per-partition max then a driver merge of partition-count rows —
-    * no global sort), and [[graft.core.Iterate]] materializes the state
-    * so round plans stay flat. Total cost k scans — the textbook lower bound
-    * for exact greedy k-center — vs the naive rebuild-dmin-per-round
-    * k² scans. Selected centers are k driver rows by construction.
+    * literals ride into codegen; no join), and [[graft.core.Iterate]]
+    * materializes the state so round plans stay flat. The argmax and
+    * the winner's vector are observed (`max_by` over (dmin, −id)) by the
+    * job that materializes the round, so a round runs no action of its
+    * own; one more action takes the seed's id and vector. Total cost k
+    * scans — the textbook lower bound for exact greedy k-center — vs the
+    * naive rebuild-dmin-per-round k² scans. Selected centers are k
+    * driver rows by construction.
     *
     * @return one row per selected center: (round 1..k, center_id,
     *         radius) where radius = the center's distance to the
@@ -487,24 +489,30 @@ object Similarity {
     require(k >= 1, s"kCenterSelect: k must be >= 1, got $k")
     val spark = emb.sparkSession
     val base = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val firstId = base.agg(min(col("id"))).head().getLong(0)
+    def vector(r: Row, i: Int) = r.getSeq[Float](i).map(_.toDouble)
+    val seed = base.orderBy(col("id").asc_nulls_last).limit(1).head()
     val selected = scala.collection.mutable.ArrayBuffer(
-      (1L, firstId, 0.0))
-    def pickFarthest(state: DataFrame): Long = {
-      val far = state.select(col("id"), col("dm"))
-        .orderBy(col("dm").desc, col("id").asc).limit(1).head()
-      selected += ((selected.size + 1L, far.getLong(0), far.getDouble(1)))
-      far.getLong(0)
+      (1L, seed.getLong(0), 0.0))
+    val farthest = Seq(max_by(struct(col("id"), col("v"), col("dm")),
+      struct(col("dm"), -col("id"))).as("far"))
+    // the farthest point of a round's observed metric is the next
+    // center; returns its vector
+    def pick(m: Map[String, Any]): Seq[Double] = {
+      val far = m("far").asInstanceOf[Row]
+      selected += ((selected.size + 1L, far.getLong(0), far.getDouble(2)))
+      vector(far, 1)
     }
-    def centerDist(id: Long): Column =
-      sqDistExact(col("v"), vectorOf(emb, idCol, vecCol, id).map(_.toDouble))
-    val init = Iterate.materialize(base.withColumn("dm", centerDist(firstId)))
-    // round r picks center r+1 and folds its distance into dm; the
-    // last center needs no fold
-    val last = Iterate.rounds(init, k - 2) { (_, state) =>
-      state.withColumn("dm", least(col("dm"), centerDist(pickFarthest(state))))
-    }.state
-    if (k >= 2) pickFarthest(last)
+    def centerDist(v: Seq[Double]): Column = sqDistExact(col("v"), v)
+    if (k >= 2) {
+      val (init, m0) = Iterate.measure(
+        base.withColumn("dm", centerDist(vector(seed, 1))), farthest)
+      // round r folds center r+1's distance into dm; the last center
+      // needs no fold
+      val (_, last) = Iterate.carry(init, m0, k - 2, farthest) { (state, m) =>
+        state.withColumn("dm", least(col("dm"), centerDist(pick(m))))
+      }
+      pick(last)
+    }
     spark.createDataFrame(selected.toSeq)
       .toDF("round", "center_id", "radius")
   }
@@ -965,7 +973,7 @@ object Similarity {
 
   /** The persisted coarse quantizer, ordered by cluster id. */
   def readCentroids(spark: SparkSession, path: String): Seq[Seq[Double]] =
-    spark.read.parquet(centroidsPath(path))
+    Tables.parquet(spark, centroidsPath(path))
       .orderBy("cluster").collect()
       .map(_.getSeq[Double](1).toSeq).toSeq
 
@@ -1051,7 +1059,7 @@ object Similarity {
                      pred: Column = lit(true),
                      asOf: Long = Long.MaxValue): DataFrame = {
     val qd = query.map(_.toDouble)
-    val clusters = spark.read.parquet(centroidsPath(path))
+    val clusters = Tables.parquet(spark, centroidsPath(path))
       .select(col("cluster"),
         (Dedup.dotExact(col("centroid"), typedlit(qd)) /
           (Dedup.normExact(col("centroid")) * Dedup.normExact(typedlit(qd))))
@@ -2066,7 +2074,7 @@ object Similarity {
     path.stripSuffix("/") + "_codebooks"
 
   def readCodebooks(spark: SparkSession, path: String): Seq[Seq[Seq[Double]]] =
-    spark.read.parquet(codebooksPath(path))
+    Tables.parquet(spark, codebooksPath(path))
       .orderBy("subspace", "code").collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toSeq).toSeq)

@@ -259,7 +259,7 @@ object LakeQueries {
           .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
             "l_returnflag"),
           path, numFiles = 8, "l_partkey", "l_suppkey")
-        s.read.parquet(path)
+        Tables.parquet(s, path)
           .filter(col("l_partkey").between(20, 79) &&
             col("l_suppkey").between(2, 5))
           .groupBy(col("l_returnflag"))
@@ -380,7 +380,7 @@ object LakeQueries {
             .select("o_orderkey", "o_custkey", "o_orderstatus",
               "o_totalprice"),
           path, numFiles = 8, Seq("o_custkey"))
-        s.read.parquet(path)
+        Tables.parquet(s, path)
           .filter(col("o_custkey").between(100, 400))
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))

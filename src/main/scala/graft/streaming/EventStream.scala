@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Tables
 import graft.ops.{Dedup, Retrieval, Similarity}
 
 /** Structured Streaming surface (SURVEY.md §2.9 — extension surface; the
@@ -62,7 +63,7 @@ object EventStream {
         col("event_type"), col("n"), col("sum_value"))
 
   def windowedAggBatch(spark: SparkSession, sfDir: String): DataFrame =
-    windowedAgg(graft.core.Tables.events(spark, sfDir))
+    windowedAgg(Tables.events(spark, sfDir))
 
   /** Run the streaming version over the same parquet file(s) and return the
     * complete-mode result table. Watermark is declared (bounding state in a
@@ -72,9 +73,9 @@ object EventStream {
                         queryNamePrefix: String = "graft_events_stream"): DataFrame =
     withStatePartitions(spark) {
     val queryName = uniqueQueryName(queryNamePrefix)
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = Tables.parquet(spark, s"$sfDir/events.parquet").schema
     // file-stream sources need a directory; glob-filter to the events file
-    val stream = graft.core.Tables.normalizeTs(
+    val stream = Tables.normalizeTs(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")
@@ -117,8 +118,8 @@ object EventStream {
     val dir = Files.createTempDirectory("graft_sess_src")
     Files.copy(src, dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
 
-    val schema = spark.read.parquet(src.toString).schema
-    val stream = graft.core.Tables.normalizeTs(
+    val schema = Tables.parquet(spark, src.toString).schema
+    val stream = Tables.normalizeTs(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(dir.toString))
@@ -142,7 +143,7 @@ object EventStream {
       // The flush value must match the RAW file schema (pre-normalizeTs),
       // whose ts physical type varies by driver data generation — int64
       // nanos or naive TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ).
-      val maxRaw = spark.read.parquet(src.toString)
+      val maxRaw = Tables.parquet(spark, src.toString)
         .agg(max(col("ts"))).head().get(0)
       val farTs: Any = maxRaw match {
         case ns: java.lang.Long => ns + 366L * 24 * 3600 * 1000000000L
@@ -183,8 +184,8 @@ object EventStream {
                      queryNamePrefix: String = "graft_dedup_stream"): DataFrame =
     withStatePartitions(spark) {
     val queryName = uniqueQueryName(queryNamePrefix)
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val stream = graft.core.Tables.normalizeTs(
+    val schema = Tables.parquet(spark, s"$sfDir/events.parquet").schema
+    val stream = Tables.normalizeTs(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sfDir))
@@ -222,8 +223,8 @@ object EventStream {
                             queryNamePrefix: String = "graft_interval_join"): DataFrame =
     withStatePartitions(spark) {
     val queryName = uniqueQueryName(queryNamePrefix)
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def side(): DataFrame = graft.core.Tables.normalizeTs(
+    val schema = Tables.parquet(spark, s"$sfDir/events.parquet").schema
+    def side(): DataFrame = Tables.normalizeTs(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sfDir))
@@ -276,7 +277,7 @@ object EventStream {
                         queryNamePrefix: String = "graft_curation_stream"): DataFrame =
     withStatePartitions(spark) {
     val queryName = uniqueQueryName(queryNamePrefix)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
+    val schema = Tables.parquet(spark, s"$sfDir/documents.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "documents.parquet")
@@ -313,7 +314,7 @@ object EventStream {
   def runIndexIngestStream(spark: SparkSession, sfDir: String,
                            path: String): String =
     withStatePartitions(spark) {
-      val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
+      val schema = Tables.parquet(spark, s"$sfDir/documents.parquet").schema
       // reset: batch 0 is an empty full build owning the directory; every
       // micro-batch then appends as batch id+1 (appendToIndex requires >0)
       Retrieval.writeIndex(
@@ -349,7 +350,7 @@ object EventStream {
   def runBandIndexIngestStream(spark: SparkSession, sfDir: String,
                                path: String): String =
     withStatePartitions(spark) {
-      val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
+      val schema = Tables.parquet(spark, s"$sfDir/documents.parquet").schema
       // batch 0 = an empty full build owning the directory
       Dedup.writeBandIndex(
         spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
@@ -395,7 +396,7 @@ object EventStream {
   def runIvfIngestStream(spark: SparkSession, sfDir: String, path: String,
                          kClusters: Int, iters: Int): String =
     withStatePartitions(spark) {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb = Tables.parquet(spark, s"$sfDir/embeddings.parquet")
       Similarity.ivfWriteLayout(emb.filter(col("vec_id") % 4 =!= 1),
         "vec_id", "embedding", path, kClusters, iters)
       val stream = spark.readStream.schema(emb.schema)
@@ -431,7 +432,7 @@ object EventStream {
                             trainedCoarse: Option[Seq[Seq[Double]]] = None,
                             trainedBooks: Option[Seq[Seq[Seq[Double]]]] = None): String =
     withStatePartitions(spark) {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb = Tables.parquet(spark, s"$sfDir/embeddings.parquet")
       Similarity.ivfAdcWriteLayout(emb.filter(col("vec_id") % 4 =!= 1),
         "vec_id", "embedding", path, kCoarse, coarseIters, m, k, iters,
         dims, trainedCoarse, trainedBooks)
@@ -462,7 +463,7 @@ object EventStream {
   def runGraphAnnIngestStream(spark: SparkSession, sfDir: String,
                               path: String, kNbrs: Int): String =
     withStatePartitions(spark) {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb = Tables.parquet(spark, s"$sfDir/embeddings.parquet")
       graft.ops.Similarity.graphAnnWriteLayout(
         emb.filter(col("vec_id") % 4 =!= 1),
         "vec_id", "embedding", "label", path, kNbrs)
@@ -515,7 +516,7 @@ object EventStream {
                          ledgerTable: String,
                          beforePublish: Long => Unit = _ => ()): Long =
     withStatePartitions(spark) {
-      val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+      val schema = Tables.parquet(spark, s"$sfDir/events.parquet").schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")
@@ -554,7 +555,7 @@ object EventStream {
   def runIncAggStream(spark: SparkSession, sfDir: String,
                       path: String): String =
     withStatePartitions(spark) {
-      val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+      val orders = Tables.parquet(spark, s"$sfDir/orders.parquet")
       graft.ops.IncrementalAgg.writeBatch(
         graft.ops.IncrementalAgg.partials(
           orders.filter(col("o_orderkey") % 3 === 0),
@@ -594,12 +595,12 @@ object EventStream {
   def runQuantilesStream(spark: SparkSession, sfDir: String, path: String,
                          lo: Double, hi: Double, bins: Int): String =
     withStatePartitions(spark) {
-      val ev = graft.core.Tables.events(spark, sfDir)
+      val ev = Tables.events(spark, sfDir)
       graft.ops.IncrementalAgg.writeBatch(
         graft.ops.Profile.histogramPartials(
           ev.filter(col("event_id") % 2 === 0), "value", lo, hi, bins),
         path, 0L)
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val raw = Tables.parquet(spark, s"$sfDir/events.parquet")
       val stream = spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")
@@ -631,12 +632,12 @@ object EventStream {
   def runForecastStream(spark: SparkSession, sfDir: String,
                         path: String): String =
     withStatePartitions(spark) {
-      val ev = graft.core.Tables.events(spark, sfDir)
+      val ev = Tables.events(spark, sfDir)
       graft.ops.IncrementalAgg.writeBatch(
         graft.ops.EventOps.dailyTypeCounts(
           ev.filter(col("event_id") % 2 === 0), "ts", "event_type"),
         path, 0L)
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val raw = Tables.parquet(spark, s"$sfDir/events.parquet")
       val stream = spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")
@@ -646,7 +647,7 @@ object EventStream {
         .foreachBatch { (df: DataFrame, id: Long) =>
           graft.ops.IncrementalAgg.writeBatch(
             graft.ops.EventOps.dailyTypeCounts(
-              graft.core.Tables.normalizeTs(df)
+              Tables.normalizeTs(df)
                 .filter(col("event_id") % 2 =!= 0), "ts", "event_type"),
             path, id + 1)
         }
@@ -671,7 +672,7 @@ object EventStream {
   def runChecksumStream(spark: SparkSession, sfDir: String,
                         path: String): String =
     withStatePartitions(spark) {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val li = Tables.parquet(spark, s"$sfDir/lineitem.parquet")
       val cols = Seq("l_orderkey", "l_partkey", "l_suppkey",
         "l_linenumber", "l_returnflag", "l_linestatus", "ship_day")
       def canon(df: DataFrame): DataFrame =
@@ -725,12 +726,12 @@ object EventStream {
   def runActiveUsersStream(spark: SparkSession, sfDir: String,
                            path: String): String =
     withStatePartitions(spark) {
-      val ev = graft.core.Tables.events(spark, sfDir)
+      val ev = Tables.events(spark, sfDir)
       graft.ops.IncrementalAgg.writeBatch(
         graft.ops.EventOps.dailyUserSketches(
           ev.filter(col("event_id") % 2 === 0), "user_id", "ts"),
         path, 0L)
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val raw = Tables.parquet(spark, s"$sfDir/events.parquet")
       val stream = spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")
@@ -740,7 +741,7 @@ object EventStream {
         .foreachBatch { (df: DataFrame, id: Long) =>
           graft.ops.IncrementalAgg.writeBatch(
             graft.ops.EventOps.dailyUserSketches(
-              graft.core.Tables.normalizeTs(df)
+              Tables.normalizeTs(df)
                 .filter(col("event_id") % 2 === 1), "user_id", "ts"),
             path, id + 1)
         }
@@ -766,10 +767,10 @@ object EventStream {
     withStatePartitions(spark) {
       def flags(df: DataFrame) = graft.ops.EventOps.abUserFlags(
         df, "user_id", "event_type", "view", "purchase")
-      val ev = graft.core.Tables.events(spark, sfDir)
+      val ev = Tables.events(spark, sfDir)
       graft.ops.IncrementalAgg.writeBatch(
         flags(ev.filter(col("event_id") % 2 === 0)), path, 0L)
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val raw = Tables.parquet(spark, s"$sfDir/events.parquet")
       val stream = spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")
@@ -803,10 +804,10 @@ object EventStream {
   def runUpsertStream(spark: SparkSession, sfDir: String, path: String,
                       deriveChanges: DataFrame => DataFrame): String =
     withStatePartitions(spark) {
-      val base = spark.read.parquet(s"$sfDir/customer.parquet")
+      val base = Tables.parquet(spark, s"$sfDir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
       graft.ops.Cdc.writeSnapshot(base, path, 0L)
-      val raw = spark.read.parquet(s"$sfDir/customer.parquet")
+      val raw = Tables.parquet(spark, s"$sfDir/customer.parquet")
       val stream = spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "customer.parquet")
@@ -841,7 +842,7 @@ object EventStream {
   def runCmsStream(spark: SparkSession, sfDir: String,
                    path: String): String =
     withStatePartitions(spark) {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = Tables.parquet(spark, s"$sfDir/documents.parquet")
       def cmsOf(df: DataFrame): DataFrame =
         graft.ops.Frequent.countMinSketch(
           graft.ops.Frequent.wsTokens(df, "text"), "token")
@@ -876,7 +877,7 @@ object EventStream {
   def runDriftStream(spark: SparkSession, sfDir: String,
                      path: String): String =
     withStatePartitions(spark) {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = Tables.parquet(spark, s"$sfDir/documents.parquet")
       val score = graft.ops.TextAnalysis.qualityScore(col("text"))
       graft.ops.IncrementalAgg.writeBatch(
         graft.ops.Profile.driftPartials(
@@ -929,7 +930,7 @@ object EventStream {
     withStatePartitions(spark) {
       import java.nio.file.Files
       val queryName = uniqueQueryName(queryNamePrefix)
-      val events = graft.core.Tables.events(spark, sfDir)
+      val events = Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("ts"),
           col("event_type"), col("value"))
       val us = unix_micros(col("ts"))
@@ -996,7 +997,7 @@ object EventStream {
       // attributable funnel state — drop them up front instead of
       // crashing on dirty input (documented stream-side contract; the
       // fixtures carry no null users, so batch ≡ stream holds there).
-      val events = graft.core.Tables.events(spark, sfDir)
+      val events = Tables.events(spark, sfDir)
         .filter(col("user_id").isNotNull)
         .select(col("user_id").cast("long").as("user_id"), col("ts"),
           col("event_type"))

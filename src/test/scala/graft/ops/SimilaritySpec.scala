@@ -1081,6 +1081,33 @@ class SimilaritySpec extends SparkSpec {
       "a checkpointed round must not be persisted a second time")
   }
 
+  test("kCenterSelect breaks equal distances to the smallest id across " +
+      "partitions, a zero-radius round included, in one job per round") {
+    // seed 10 at x = 0; 20 and 40 share x = 5, 30 sits at x = -5. Higher
+    // ids come first in partition order, so a per-partition argmax that
+    // ignored the id would pick 40 or 30.
+    val emb = spark.sparkContext.parallelize(Seq((40L, Seq(5.0f, 0.0f)),
+      (30L, Seq(-5.0f, 0.0f)), (20L, Seq(5.0f, 0.0f)), (10L, Seq(0.0f, 0.0f))), 3)
+      .toDF("vec_id", "embedding")
+    val m = graft.core.QueryMetrics.register(spark.sparkContext)
+    try {
+      var picked: org.apache.spark.sql.DataFrame = null
+      assert(graft.core.Watchdog.run(spark.sparkContext, "kc-ties", 120) {
+        picked = Similarity.kCenterSelect(emb, "vec_id", "embedding", k = 4)
+      }.isEmpty)
+      val got = picked.orderBy("round").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      // round 2: 20, 30 and 40 tie at 25; round 3: 30 (40 now at 0);
+      // round 4: every point at 0, so the smallest id again
+      assert(got == Seq((1L, 10L, 0.0), (2L, 20L, 25.0), (3L, 30L, 25.0),
+        (4L, 10L, 0.0)), s"selection mismatch: $got")
+      val jobs = m.take("kc-ties").jobs
+      // the seed, then the initial state and k - 2 rounds, each one
+      // materializing job that also observes its argmax
+      assert(jobs <= 4, s"$jobs jobs")
+    } finally spark.sparkContext.removeSparkListener(m)
+  }
+
   test("graphAnn layout: probe == in-memory serve; append freezes " +
       "batch-0 edges; unmarked batch stays invisible") {
     val emb = graft.core.Tables.embeddings(spark, graft.SparkSpec.Sf0001)
